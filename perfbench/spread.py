@@ -1,7 +1,9 @@
-"""Run-to-run spread of the end-to-end metrics, as the acceptance rule
-measures it: N runs per workload, each with another seed; for every metric
-the inter-quartile distance of the N values as a share of their median,
-set against a third of the metric's bound.
+"""Run-to-run spread of the end-to-end metrics: N runs per workload, each
+with another seed; for every metric the inter-quartile distance of the N
+values as a share of their median, set against a third of the metric's
+bound. The exit code is non-zero when a
+run fails or a spread is wider than that, except the spread of `setup_s`:
+it is printed but not gated, as set-up is compared by its median only.
 
     python3 perfbench/spread.py [--runs 10] [--workload NAME ...] [--first-seed 1]
 """
@@ -46,9 +48,11 @@ def main():
             s = stats.spread(xs)
             q1, q3 = stats.quartiles(xs)
             within = s <= bounds[k] / 3
-            ok &= within or k == "setup_s"
+            gated = k != "setup_s"
+            ok &= within or not gated
+            verdict = ("ok" if within else "WIDE") + ("" if gated else " (not gated)")
             print(f"{w:8s} {k:14s} median={stats.median(xs):.4g} q1={q1:.4g} q3={q3:.4g} "
-                  f"spread={s:.3f} bound/3={bounds[k] / 3:.3f} {'ok' if within else 'WIDE'}")
+                  f"spread={s:.3f} bound/3={bounds[k] / 3:.3f} {verdict}")
     sys.exit(0 if ok else 1)
 
 

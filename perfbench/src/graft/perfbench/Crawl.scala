@@ -10,8 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One crawl scheduler mode of the `crawl` workload. Warm rounds on the
-  * part's own seeded graph build a checkpoint once (the part's warm pass);
-  * every pass resumes a fresh copy of it and runs the same rounds.
+  * part's own seeded graph build a checkpoint once, in set-up; every pass
+  * resumes a fresh copy of it and runs the same rounds.
   * Per-layer names carry the mode: `FrontierCrawler.<mode>.*`. */
 abstract class CrawlPart(spark: SparkSession, root: Path, val mode: String) extends Workload {
   import spark.implicits._
@@ -91,14 +91,15 @@ abstract class CrawlPart(spark: SparkSession, root: Path, val mode: String) exte
   /** Each crawl-path expression in isolation over the part's own links
     * (resolved against their page, cached so the scan is cheap): ns per
     * row of the expression's projection, plus the measured false-positive
-    * rate of a seen-filter sized like the crawl's and filled with the last
-    * pass's found set. */
+    * rate of a seen-filter sized like the crawl's and filled to its design
+    * load. */
   protected def functionProbes(led: Ledger, robots: DataFrame, cfg: CrawlConfig)
       : Map[String, Double] = {
     val links = pages.select($"url".as("base"), explode($"links").as("href"))
       .select(UrlFunctions.url_resolve($"base", $"href").as("abs"))
       .filter($"abs".isNotNull)
-    // repeated to ~200k rows, so per-row cost outweighs per-query overhead
+    // at least ~200k rows (repeated if fewer), so per-row cost outweighs
+    // per-query overhead
     val copies = math.max(1L, 200000L / math.max(1L, links.count()))
     val abs = links.crossJoin(spark.range(copies).toDF("copy")).drop("copy").cache()
     val n = abs.count().toDouble
@@ -122,12 +123,15 @@ abstract class CrawlPart(spark: SparkSession, root: Path, val mode: String) exte
       RobotsFunctions.robots_allowed($"path", $"dis", emptyArr))
     val hashes = abs.select(UrlFunctions.url_seen_key($"abs").as("urlHash")).cache()
     hashes.count()
+    // filled to its design load with keys of URLs outside the graph, so
+    // every probe of a graph link that answers true is a false positive
+    val fill = spark.range(cfg.bloomExpectedItems).select(UrlFunctions.url_seen_key(
+      concat(lit("http://fill.invalid/p/"), $"id".cast("string"))).as("urlHash"))
     val bc = spark.sparkContext.broadcast(
-      last.found.stat.bloomFilter("urlHash", cfg.bloomExpectedItems, cfg.bloomFpp))
+      fill.stat.bloomFilter("urlHash", cfg.bloomExpectedItems, cfg.bloomFpp))
     val probe = nsPerRow("functions.seen_probe", hashes,
       BloomFunctions.bloom_might_contain($"urlHash", bc))
-    val fpp = hashes.join(last.found.select("urlHash"), Seq("urlHash"), "left_anti")
-      .agg(avg(BloomFunctions.bloom_might_contain($"urlHash", bc).cast("double")))
+    val fpp = hashes.agg(avg(BloomFunctions.bloom_might_contain($"urlHash", bc).cast("double")))
       .head().getDouble(0)
     Seq(abs, withRules, hashes).foreach(_.unpersist())
     bc.destroy()
@@ -146,6 +150,8 @@ final class Crawl(spark: SparkSession, work: Path, seed: Long, tiny: Boolean) ex
 
   def prepare(): Unit = { polite.prepare(); fifo.prepare() }
   def prepareOnce(): Unit = polite.prepareOnce()
+  def warmPasses: Int = polite.warmPasses
+  def minTimed: Int = polite.minTimed
   def reset(pass: Int): Unit = polite.reset(pass)
   def pass(pass: Int, led: Option[Ledger]): Long = polite.pass(pass, led)
   def check(pass: Int, led: Option[Ledger]): Seq[String] = polite.check(pass, led)
@@ -162,21 +168,28 @@ final class Crawl(spark: SparkSession, work: Path, seed: Long, tiny: Boolean) ex
   }
 }
 
-/** Polite part: `crawlSeeds` in polite mode over a skewed multi-host graph
-  * (one host holds 30% of the pages; redirects, errors, dead and
-  * cross-host links everywhere) with a robots cache. The frontier passes
-  * `bloomMinFrontierRows` during the warm rounds, so the timed rounds run
-  * the seen-filter probe. */
+/** Polite part: `crawlSeeds` in polite mode at the scale of the repo's
+  * crawl bench (`graft.Bench.crawlBench`): a skewed 32-host graph of 4,000
+  * pages a host (one host holds 30% of the pages; redirects, errors, dead
+  * and cross-host links everywhere), per-host budget 256, a robots cache,
+  * and every host seeded with a full budget of pages, so each round is a
+  * full round from the first one on. The checkpoint holds one warm round;
+  * each pass resumes it for one more. The frontier is past
+  * `bloomMinFrontierRows` by then, so the round runs the seen-filter
+  * probe; with a snapshot every round it also launches (and, being the
+  * last round of the call, awaits) one seen-filter build. */
 final class PoliteCrawl(spark: SparkSession, root: Path, seed: Long, tiny: Boolean)
     extends CrawlPart(spark, root, "polite") {
   import spark.implicits._
 
-  private val hosts = if (tiny) 4 else 8
-  private val perHost = if (tiny) 60 else 400
-  private val budget = if (tiny) 8 else 32
-  protected val warmRounds = 2
+  private val hosts = if (tiny) 4 else 32
+  private val perHost = if (tiny) 60 else 4000
+  private val budget = if (tiny) 8 else 256
+  protected val warmRounds = 1
   protected val endRound = warmRounds + 1
   protected val crawlSpan = "FrontierCrawler.crawlSeeds"
+  val warmPasses = 1
+  val minTimed = 3
 
   private def params = SiteGraph.GraphParams(nHosts = hosts,
     pagesPerHost = perHost, linksPerPage = 6, seed = seed, redirectFrac = 0.08,
@@ -197,10 +210,12 @@ final class PoliteCrawl(spark: SparkSession, root: Path, seed: Long, tiny: Boole
   private def robots: DataFrame =
     robotsRows.toDF("host", "disallow", "crawlDelay", "disallowPrefixes")
 
+  /** The crawl bench's polite configuration (no same-domain filter,
+    * bucketed redirect closure), with the robots cache on top. */
   private def config(maxRounds: Int, dir: Option[Path]) = CrawlConfig(
-    fifoParity = false, perHostBudget = budget, saltBuckets = 16,
-    bloomEnabled = true, bloomExpectedItems = 4L * hosts * perHost,
-    bloomMinFrontierRows = if (tiny) 0L else 256L,
+    fifoParity = false, sameDomainOnly = false, perHostBudget = budget, saltBuckets = 16,
+    bloomEnabled = true, bloomExpectedItems = 4L * hosts * perHost, bloomUpdateEvery = 1,
+    bloomMinFrontierRows = if (tiny) 0L else 4096L, closureBuckets = if (tiny) 0 else 32,
     maxRounds = maxRounds, checkpointDir = dir.map(_.toString))
 
   val rules: Checks.PoliteRules = {
@@ -215,11 +230,12 @@ final class PoliteCrawl(spark: SparkSession, root: Path, seed: Long, tiny: Boole
       disallow = robotsRows.map { case (h, _, _, p) => h -> p }.toMap)
   }
 
-  /** Twelve evenly spaced seed pages per host: every host's frontier
-    * outgrows its budget from the second round on, so a round's work is
-    * the same for every seed. */
+  /** A full budget of evenly spaced seed pages per host: every host's
+    * frontier holds more than its budget from the first round on, so a
+    * round's work is nearly the same for every seed. */
   private def seeds: DataFrame = (0 until hosts).flatMap { h =>
-    (0 until 12).map(k => SiteGraph.pageUrl(h, (k * perHost / 12).toLong))
+    val n = SiteGraph.pagesOnHost(h, params)
+    (0 until budget).map(k => SiteGraph.pageUrl(h, k * n / budget))
   }.toDF("url")
 
   protected def crawlTo(dir: Path, maxRounds: Int): CrawlOutcome =
@@ -274,6 +290,8 @@ final class FifoCrawl(spark: SparkSession, root: Path, seed: Long, tiny: Boolean
 
   protected val warmRounds = 0
   protected val endRound = Int.MaxValue
+  val warmPasses = 0
+  val minTimed = 1
 
   protected def crawlTo(dir: Path, maxRounds: Int): CrawlOutcome =
     new FrontierCrawler(spark, pages,

@@ -27,7 +27,7 @@ import scala.jdk.CollectionConverters._
 final class Curate(spark: SparkSession, work: Path, seed: Long, tiny: Boolean) extends Workload {
   import spark.implicits._
 
-  private val nDocs = if (tiny) 300 else 500
+  private val nDocs = if (tiny) 150 else 300
   private val nImages = if (tiny) 60 else 300
   private val inputs = work.resolve("inputs")
   private val out = work.resolve("pass")
@@ -47,30 +47,21 @@ final class Curate(spark: SparkSession, work: Path, seed: Long, tiny: Boolean) e
 
   private def path(name: String) = inputs.resolve(name).toString
 
-  private def args(tag: String, outDir: String) = Array(path(s"docs$tag"), outDir,
+  private def args(outDir: String) = Array(path("docs"), outDir,
     "--near-dup", nearDup.toString, "--max-df", maxDf.toString,
-    "--decontam", path(s"eval$tag"), "--split", "train:0.8,val:0.1,test:0.1",
+    "--decontam", path("eval"), "--split", "train:0.8,val:0.1,test:0.1",
     "--pack-budget", "2048")
 
-  private def writeCorpus(n: Int, s: Long, tag: String): Unit = {
-    val (docs, eval) = TextGen.corpus(n, s)
-    docs.toDF("doc_id", "text", "source").write.mode("overwrite").parquet(path(s"docs$tag"))
-    eval.toDF("doc_id", "text").write.mode("overwrite").parquet(path(s"eval$tag"))
-  }
-
   def prepare(): Unit = {
-    writeCorpus(nDocs, seed, "")
-    writeCorpus(nDocs / 4, seed + 1, "-warm")
+    val (docs, eval) = TextGen.corpus(nDocs, seed)
+    docs.toDF("doc_id", "text", "source").write.mode("overwrite").parquet(path("docs"))
+    eval.toDF("doc_id", "text").write.mode("overwrite").parquet(path("eval"))
   }
 
-  /** The warm pass: the same CLI call and merge on a quarter-size corpus. */
-  def prepareOnce(): Unit = {
-    val warmOut = work.resolve("warm")
-    Dirs.fresh(warmOut)
-    CurateCli.run(spark, args("-warm", warmOut.toString))
-    new IceLite(spark, warmOut.resolve("table").toString)
-      .mergeInsert(spark.read.parquet(warmOut.resolve("curated").toString), "doc_id")
-  }
+  def prepareOnce(): Unit = ()
+
+  val warmPasses = 1
+  val minTimed = 2
 
   def reset(pass: Int): Unit = { Dirs.fresh(out); Dirs.delete(tableDir) }
 
@@ -80,7 +71,7 @@ final class Curate(spark: SparkSession, work: Path, seed: Long, tiny: Boolean) e
 
   def pass(pass: Int, led: Option[Ledger]): Long = {
     def span[T](name: String)(body: => T): T = led.fold(body)(_.span(name)(body))
-    summary = span("CurateCli.run")(CurateCli.run(spark, args("", out.toString)))
+    summary = span("CurateCli.run")(CurateCli.run(spark, args(out.toString)))
     inserted = span("IceLite.mergeInsert") {
       table.mergeInsert(spark.read.parquet(out.resolve("curated").toString), "doc_id")
     }

@@ -49,6 +49,7 @@ object Stats {
   * the window, the heap in use at [[peakMb]] time stands in. */
 object HeapPeak {
   @volatile private var peak = -1L
+  @volatile private var count = 0
   private lazy val heapPools: Set[String] = ManagementFactory.getMemoryPoolMXBeans.asScala
     .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
 
@@ -59,7 +60,7 @@ object HeapPeak {
           .from(n.getUserData.asInstanceOf[CompositeData])
         val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
           .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
-        HeapPeak.synchronized { if (used > peak) peak = used }
+        HeapPeak.synchronized { count += 1; if (used > peak) peak = used }
       }
   }
 
@@ -68,7 +69,10 @@ object HeapPeak {
     case _ => ()
   }
 
-  def reset(): Unit = synchronized { peak = -1L }
+  def reset(): Unit = synchronized { peak = -1L; count = 0 }
+
+  /** Collections seen since the last [[reset]]. */
+  def collections: Int = count
 
   def peakMb(): Double = synchronized {
     val b = if (peak >= 0) peak

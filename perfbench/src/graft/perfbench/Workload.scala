@@ -1,18 +1,25 @@
 package graft.perfbench
 
 /** One benchmark workload. The harness runs [[prepare]] several times (the
-  * set-up repetitions), [[prepareOnce]] once, then timed passes: an
-  * untimed [[reset]], the timed [[pass]], and the untimed [[check]] of
-  * what the pass produced. A traced run hands the ledger to [[pass]] and
-  * [[check]] on every other pass and asks [[layers]] for the per-layer
-  * numbers at the end. */
+  * set-up repetitions), [[prepareOnce]] once, then [[warmPasses]] untimed
+  * and then the timed passes: an untimed [[reset]], the [[pass]], and the
+  * untimed [[check]] of what the pass produced. A traced run hands the
+  * ledger to [[pass]] and [[check]] on half the timed passes and asks
+  * [[layers]] for the per-layer numbers at the end. */
 trait Workload {
   /** Generates and writes the seeded inputs. */
   def prepare(): Unit
 
-  /** Set-up that runs once, after the repetitions: the untimed warm pass
-    * (and whatever state the timed passes start from). */
+  /** Set-up that runs once, after the repetitions: whatever state the
+    * passes start from. */
   def prepareOnce(): Unit
+
+  /** Untimed passes before the timed ones, enough to reach a steady pass
+    * time. */
+  def warmPasses: Int
+
+  /** Fewest timed passes of an untraced run. */
+  def minTimed: Int
 
   def reset(pass: Int): Unit
 

@@ -36,21 +36,41 @@ class StatsTest(unittest.TestCase):
 
 class EndToEndTest(unittest.TestCase):
     def raw(self, passes):
-        return {"setup": {"ready_s": 2.0, "reps_s": [9.0, 1.0, 3.0], "once_s": 4.0},
+        return {"setup": {"ready_s": 2.0, "reps_s": [9.0, 1.0, 3.0], "once_s": 4.0,
+                          "warm_s": 5.0},
                 "passes": passes}
 
-    def test_setup_is_ready_plus_median_rep_plus_once(self):
-        p = {"wall_s": 2.0, "items": 10, "heap_mb": 100.0, "traced": False, "errors": []}
-        self.assertEqual(run.end_to_end(self.raw([p]))["setup_s"], 2.0 + 3.0 + 4.0)
+    @staticmethod
+    def sample(wall, items=10, heap=100.0, traced=False, warm=False, errors=()):
+        return {"wall_s": wall, "items": items, "heap_mb": heap, "traced": traced,
+                "warm": warm, "errors": list(errors)}
 
-    def test_failed_and_traced_passes_are_not_timed_as_successes(self):
-        good = {"wall_s": 2.0, "items": 10, "heap_mb": 100.0, "traced": False, "errors": []}
-        bad = {"wall_s": 0.1, "items": 0, "heap_mb": 1.0, "traced": False, "errors": ["x"]}
-        traced = {"wall_s": 9.0, "items": 10, "heap_mb": 900.0, "traced": True, "errors": []}
-        m = run.end_to_end(self.raw([good, bad, traced, good]))
+    def test_setup_is_ready_plus_median_rep_plus_once_plus_warm(self):
+        m = run.end_to_end(self.raw([self.sample(2.0)]))
+        self.assertEqual(m["setup_s"], 2.0 + 3.0 + 4.0 + 5.0)
+
+    def test_failed_traced_and_warm_passes_are_not_timed_as_successes(self):
+        good = self.sample(2.0)
+        bad = self.sample(0.1, items=0, heap=1.0, errors=["x"])
+        traced = self.sample(9.0, heap=900.0, traced=True)
+        warm = self.sample(7.0, heap=700.0, warm=True)
+        m = run.end_to_end(self.raw([warm, good, bad, traced, good]))
         self.assertEqual(m["wall_s"], 2.0)
         self.assertEqual(m["items_per_s"], 5.0)
         self.assertEqual(m["peak_heap_mb"], 100.0)
+
+    def test_times_are_medians_and_the_heap_peak_is_the_largest(self):
+        passes = [self.sample(w, heap=h) for w, h in ((3.0, 300.0), (1.0, 500.0), (2.0, 400.0))]
+        m = run.end_to_end(self.raw(passes))
+        self.assertEqual(m["wall_s"], 2.0)
+        self.assertEqual(m["peak_heap_mb"], 500.0)
+
+    def test_no_good_pass_reports_no_timing(self):
+        bad = self.sample(0.1, errors=["x"])
+        m = run.end_to_end(self.raw([self.sample(3.0, warm=True), bad]))
+        self.assertIsNone(m["wall_s"])
+        self.assertIsNone(m["items_per_s"])
+        self.assertIsNone(m["peak_heap_mb"])
 
 
 class JvmSelfTest(unittest.TestCase):
