@@ -190,7 +190,21 @@ object CurateCli {
       i += 1
     }
     if (pos.length != 2) throw CliUsageError("input-parquet and output-dir are required")
-    sample.foreach(r => if (r <= 0 || r > 1) throw CliUsageError("--sample must be in (0, 1]"))
+    // range checks at PARSE time (exit 2): out of range, these values either
+    // fail deep in the engine after audits are written (--pack-budget 0
+    // divides by zero) or silently degrade the run (--max-df 0 and
+    // --near-dup 1.5 turn near-dup off, --ngram 0 means unigrams, a
+    // negative budget writes negative pack ids). Comparisons are phrased so
+    // that NaN fails them.
+    def check(ok: Boolean, msg: String): Unit = if (!ok) throw CliUsageError(msg)
+    sample.foreach(r => check(r > 0 && r <= 1, "--sample must be in (0, 1]"))
+    nearDup.foreach(t => check(t > 0 && t <= 1, "--near-dup must be in (0, 1]"))
+    packBudget.foreach(b => check(b >= 1, "--pack-budget must be >= 1"))
+    check(ngram >= 1, "--ngram must be >= 1")
+    check(maxDf >= 1, "--max-df must be >= 1")
+    check(decontamNgram >= 1, "--decontam-ngram must be >= 1")
+    check(decontamMin >= 1, "--decontam-min must be >= 1")
+    check(minTokens >= 0, "--min-tokens must be >= 0")
     val Seq(in, outDir) = pos.toSeq
     def audit(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/audit/$name")

@@ -42,8 +42,9 @@ object Dedup {
     * inlining `split(text)` into the transform body would re-split each row
     * three times — measurable at 100-TB text scale. CollapseProject keeps the
     * binding because the split is non-cheap and referenced more than once. */
-  def shingleTokens(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    if (n <= 1)
+  def shingleTokens(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    require(n >= 1, s"dedup: shingle width n=$n must be >= 1")
+    if (n == 1)
       df.select(col(idCol), explode(split(col(textCol), " ")).as("token")).distinct()
     else
       df.select(col(idCol), split(col(textCol), " ").as("__toks"))
@@ -52,6 +53,7 @@ object Dedup {
           s"transform(sequence(1, size(__toks) - ${n - 1}), " +
             s"i -> array_join(slice(__toks, i, $n), ' '))")).as("token"))
         .distinct()
+  }
 
   /** (id, token) relation of distinct whitespace tokens with hash column. */
   def distinctTokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -260,10 +262,28 @@ object Dedup {
     * fewer than `ngram` tokens have an empty shingle set and emit no
     * pairs) — order-sensitive near-dup detection, the form used on large
     * text corpora where unigram sets are too permissive.
+    *
+    * The call is not lazy: it runs one job, which binds the distinct
+    * shingle relation (see the note at the binding).
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
-    val toks = capTokensByDf(shingleTokens(df, idCol, textCol, ngram), maxDf)
+    // bind the distinct shingle relation ONCE, before the df cap. The
+    // capped relation is referenced 4 times below (both self-join sides,
+    // `sizes` twice) and the cap references its input twice more, so an
+    // unbound plan derives the shingles 8 times. AQE's stage reuse hides
+    // most of that on a plain parquet input (5 reused exchanges, 2
+    // shingle Generates in the final plan), but it misses when the input
+    // holds a join that AQE re-plans at run time — CurateCli's input, the
+    // cached docs joined to the `exact` keep ids: there the final plan of
+    // the pair query (300-doc corpus, local[4]) held 26 shuffle exchanges,
+    // 15 broadcast exchanges, 16 input scans, 0 reused exchanges and 8
+    // Generates, and took 3.2 s (0.9 s with this binding). The eager
+    // `localCheckpoint` (as [[connectedComponents]] does for its pair
+    // input) makes the generator's cost independent of the caller's plan
+    // shape.
+    val shingles = shingleTokens(df, idCol, textCol, ngram).localCheckpoint(true)
+    val toks = capTokensByDf(shingles, maxDf)
     val sizes = toks.groupBy(idCol).agg(count(lit(1)).as("sz"))
     val l = toks.select(col("token"), col(idCol).as("d1"))
     val r = toks.select(col("token"), col(idCol).as("d2"))
@@ -288,13 +308,16 @@ object Dedup {
     * over the FULL universe so scores equal the batch recompute bit-exactly
     * (delta–delta pairs appear under both join orientations and are
     * canonicalized before counting). Ids must be distinct across the two
-    * inputs. */
+    * inputs. Like [[jaccardPairs]], the call runs one job that binds the
+    * shingle relation of `corpus ∪ delta` once. */
   def jaccardPairsIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
-    val allToks = capTokensByDf(
-      shingleTokens(corpus, idCol, textCol, ngram)
-        .unionByName(shingleTokens(delta, idCol, textCol, ngram)), maxDf)
+    // bound once for the reason given in jaccardPairs
+    val shingles = shingleTokens(corpus, idCol, textCol, ngram)
+      .unionByName(shingleTokens(delta, idCol, textCol, ngram))
+      .localCheckpoint(true)
+    val allToks = capTokensByDf(shingles, maxDf)
     val deltaIds = delta.select(col(idCol)).distinct()
     val deltaToks = allToks.join(deltaIds, Seq(idCol)) // capped delta side
     val sizes = allToks.groupBy(idCol).agg(count(lit(1)).as("sz"))

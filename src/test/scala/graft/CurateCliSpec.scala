@@ -182,7 +182,19 @@ class CurateCliSpec extends AnyFunSuite {
       Array("/tmp/x", "/tmp/y", "--min-tokens", "abc"), // not a number
       Array("/tmp/x", "/tmp/y", "--near-dup"),   // missing value
       Array("/tmp/x", "/tmp/y", "--split", "train:0.4"), // weights != 1
-      Array("/tmp/x", "/tmp/y", "--split", "garbage"))   // not name:weight
+      Array("/tmp/x", "/tmp/y", "--split", "garbage"),   // not name:weight
+      // out-of-range values that used to fail late or degrade silently
+      Array("/tmp/x", "/tmp/y", "--pack-budget", "0"),   // divide by zero
+      Array("/tmp/x", "/tmp/y", "--pack-budget", "-5"),  // negative pack ids
+      Array("/tmp/x", "/tmp/y", "--near-dup", "0"),
+      Array("/tmp/x", "/tmp/y", "--near-dup", "1.5"),    // near-dup off
+      Array("/tmp/x", "/tmp/y", "--near-dup", "NaN"),
+      Array("/tmp/x", "/tmp/y", "--ngram", "0"),         // unigrams
+      Array("/tmp/x", "/tmp/y", "--max-df", "0"),        // near-dup off
+      Array("/tmp/x", "/tmp/y", "--decontam-ngram", "0"),
+      Array("/tmp/x", "/tmp/y", "--decontam-min", "0"),
+      Array("/tmp/x", "/tmp/y", "--min-tokens", "-1"),
+      Array("/tmp/x", "/tmp/y", "--sample", "NaN"))
     cases.foreach { a =>
       assertThrows[CurateCli.CliUsageError](CurateCli.run(spark, a))
     }
