@@ -3,7 +3,7 @@ package graft
 import graft.model.CrawlConfig
 import graft.operators.FrontierCrawler
 import graft.sources.SiteGraph
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark harness (driver contract): times every contract query
   * on `SPARK_GRAFT_SF_DIR` plus the flagship frontier-crawl throughput, and
@@ -87,6 +87,26 @@ object Bench {
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
     } catch { case _: Exception => () }
     (secs, out.stats.scheduledTotal + out.stats.fetchedTotal - warmWork, roundMetrics)
+  }
+
+  /** Runs each query once into the noop sink, in name order, and times it.
+    * A query that throws has no time: its name lands in the second list
+    * instead, and the caller must fail the run. */
+  def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right(name -> (System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Exception =>
+          System.err.println(s"[bench] $name failed: $e")
+          Left(name)
+      }
+    }
+    (runs.collect { case Right(t) => t }, runs.collect { case Left(n) => n })
   }
 
   /** Median — the recorded bench headline must not move with one outlier
@@ -212,20 +232,18 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val (results, failed) = timeQueries(spark, sfDir, SparkEntry.queries)
 
     val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val rawJson = rawRates.map(r => f"$r%.1f").mkString("[", ",", "]")
     val steadyJson = steadyRates.map(r => f"$r%.1f").mkString("[", ",", "]")
     println(
-      f"""{"metric":"total_query_sec","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","crawl_sec":$crawlSecs%.3f,"crawl_urls_scheduled":$crawlWork,"crawl_urls_per_sec":$urlsPerSec%.1f,"crawl_runs_urls_per_sec":$steadyJson,"crawl_raw_window_urls_per_sec":$rawJson,"cpus":$cpus}""")
+      f"""{"metric":"total_query_sec","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","crawl_sec":$crawlSecs%.3f,"crawl_urls_scheduled":$crawlWork,"crawl_urls_per_sec":$urlsPerSec%.1f,"crawl_runs_urls_per_sec":$steadyJson,"crawl_raw_window_urls_per_sec":$rawJson,"cpus":$cpus}""")
     spark.stop()
+    // a bench with a failed query has no valid total
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.ops.{Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** spark-submit entry for the training-data curation pipeline — the
   * document-side counterpart of `CrawlCli`: one command takes a crawled
@@ -210,7 +211,17 @@ object CurateCli {
       df.write.mode("overwrite").parquet(s"$outDir/audit/$name")
 
     val docs = spark.read.parquet(in)
+    // near-dup clustering labels components in int64 id space
+    // (Dedup.dedupComponents casts the ids to long): a non-integral id
+    // would cast to null and the run would silently keep nothing
+    if (nearDup.isDefined) docs.select(col(idCol)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw CliUsageError(
+        s"--near-dup needs an integral --id-col; '$idCol' is ${t.simpleString}")
+    }
     val nInput = docs.count()
+    // each stage's survivors are bound as a flat relation (see StageBindings)
+    val bind = new StageBindings
 
     // 1. quality gates — per-row metrics plus grouped repetition fractions.
     // LEFT join: a doc with null/empty text produces no repetition row, and
@@ -237,10 +248,11 @@ object CurateCli {
       if (!compressGate) withGates0
       else withGates0.withColumn("__cr",
         graft.functions.TextFunctions.compression_ratio(col(textCol)))
-    val qualityOk = withGates.filter(passCond)
-    audit(withGates.filter(!passCond).select(idCol), "dropped_quality")
-    val afterQuality = qualityOk
-      .drop("__dr", "__cr", "repetition_ok", "tokens_ok").cache()
+    // graded once: the drop audit and the survivors both read the pass flag
+    val graded = bind(withGates.withColumn("__pass", passCond))
+    audit(graded.filter(!col("__pass")).select(idCol), "dropped_quality")
+    val afterQuality = graded.filter(col("__pass"))
+      .drop("__pass", "__dr", "__cr", "repetition_ok", "tokens_ok")
     val nQuality = afterQuality.count()
 
     // 1b. optional benchmark decontamination — BEFORE dedup, so a
@@ -248,50 +260,45 @@ object CurateCli {
     // representative. The eval set is the broadcast-small build side of
     // the shingle join (TextOps.contamination); drops re-attach by
     // anti-join on the slim flagged-id relation.
-    var flaggedCache: Option[DataFrame] = None
     val decontamed = decontam match {
       case None => afterQuality
       case Some(path) =>
         val evalSet = spark.read.parquet(path)
-        // cached: the corpus-side shingle pass feeds BOTH the audit write
-        // and the anti-join — without the cache it runs twice
-        val flagged = TextOps.contamination(afterQuality, evalSet, idCol,
-          textCol, decontamNgram, decontamMin).cache()
-        flaggedCache = Some(flagged)
+        // bound: the corpus-side shingle pass feeds BOTH the audit write
+        // and the anti-join — unbound it runs twice
+        val flagged = bind(TextOps.contamination(afterQuality, evalSet, idCol,
+          textCol, decontamNgram, decontamMin))
         audit(flagged, "dropped_decontam")
-        afterQuality.join(flagged.select(idCol), Seq(idCol), "left_anti")
-          .cache()
+        bind(afterQuality.join(flagged.select(idCol), Seq(idCol), "left_anti"))
     }
     val nDecontam = if (decontam.isDefined) decontamed.count() else nQuality
 
-    // 2. dedup: exact always; near-dup clustering when requested
+    // 2. dedup: exact always; near-dup clustering when requested. The
+    // exact survivors are bound: the pair generation, the components'
+    // vertex set and the near-dup keep join all read them, and each would
+    // otherwise re-run the exact-dedup aggregation.
     val exactKeep = Dedup.exact(decontamed, idCol, textCol)
       .select(col("keep_id").as(idCol))
-    val exactDeduped = decontamed.join(exactKeep, Seq(idCol))
-    // cached like afterQuality: the dedup subtree (exact-dedup agg +
-    // keep-join, and with --near-dup the pair generation's keep-join) is
-    // re-read by the nDedup count, the PII audit, the nSampled count AND
-    // the final write — without the cache each of those re-executes it
+    val exactDeduped = bind(decontamed.join(exactKeep, Seq(idCol)))
     // with --split, the kept rows' dedup-group labels survive the stage:
     // the split column is keyed on them (never the row id — id-hash splits
     // are the leak Dedup.leakageSafeSplit documents)
     var dupLabels: Option[DataFrame] = None
-    var groupsCache: Option[DataFrame] = None
-    val deduped = (nearDup match {
+    val deduped = nearDup match {
       case None => exactDeduped
       case Some(t) =>
         val pairs = Dedup.jaccardPairs(exactDeduped, idCol, textCol, t, maxDf, ngram)
-        // cached: the jaccard-pairs + connected-components subtree is the
+        // bound: the jaccard-pairs + connected-components subtree is the
         // pipeline's most expensive stage and feeds the audit, the keep
         // join, and (with --split) the label join — one execution, not 3
-        val groups = Dedup.dedupComponents(exactDeduped, idCol, pairs).cache()
-        groupsCache = Some(groups)
+        val groups = bind(Dedup.dedupComponents(exactDeduped, idCol, pairs))
         audit(groups.filter(col("is_kept") === 0), "dropped_near_dup")
         if (splitSpec.isDefined)
           dupLabels = Some(groups.filter(col("is_kept") === 1)
             .select(col(idCol), col("component").as("__lbl")))
-        exactDeduped.join(groups.filter(col("is_kept") === 1).select(idCol), Seq(idCol))
-    }).cache()
+        bind(exactDeduped.join(groups.filter(col("is_kept") === 1).select(idCol),
+          Seq(idCol)))
+    }
     val nDedup = deduped.count()
 
     // 2b. span-level exact-substring dedup (Lee et al. 2022): duplicated
@@ -300,14 +307,12 @@ object CurateCli {
     // unique content). Runs after doc dedup so the removed occurrences are
     // the ones a training run would actually see; docs reduced to nothing
     // carry no signal and drop (audited, counted in the summary).
-    var cleanedCache: Option[DataFrame] = None
     val spanned = dropSpans match {
       case None => deduped
       case Some(n) =>
-        val cleaned = Dedup.dropDuplicateSpans(deduped, idCol, textCol, n,
-            spanMinOcc, hashWindows = spanHash)
-          .cache() // feeds the audit write + every downstream action
-        cleanedCache = Some(cleaned)
+        // bound: feeds the audit write + every downstream action
+        val cleaned = bind(Dedup.dropDuplicateSpans(deduped, idCol, textCol, n,
+          spanMinOcc, hashWindows = spanHash))
         audit(cleaned.filter(col("n_removed") > 0)
           .select(col(idCol), col("n_tokens"), col("n_removed")), "span_removed")
         deduped.drop(textCol)
@@ -381,12 +386,7 @@ object CurateCli {
     val writer = written.write.mode("overwrite")
     (if (splitSpec.isDefined) writer.partitionBy("split") else writer)
       .parquet(s"$outDir/curated")
-    cleanedCache.foreach(_.unpersist())
-    deduped.unpersist()
-    groupsCache.foreach(_.unpersist())
-    flaggedCache.foreach(_.unpersist())
-    if (decontam.isDefined) decontamed.unpersist()
-    afterQuality.unpersist()
+    bind.release()
     // nSampled guard: an everything-filtered corpus under partitionBy
     // writes only _SUCCESS (no schema-bearing file), so the read-back
     // would fail — the receipt instead says zero for every named split

@@ -79,7 +79,7 @@ object ImageCurateCli {
       |                   Pairs missing from P pass through unclustered
       |                   (audit: dropped_semantic)
       |  --semantic-min T Cosine threshold for --semantic (default 0.95)
-      |  --semantic-planes N  LSH hyperplanes PER BAND (default 8)
+      |  --semantic-planes N  LSH hyperplanes PER BAND, 1..63 (default 8)
       |  --semantic-bands B   LSH bands (default 8; 8x8 catches ~99% of
       |                   cos-0.95 pairs — the amplified AND-OR
       |                   construction, precision owned by the
@@ -204,6 +204,9 @@ object ImageCurateCli {
     }
     if (pos.length != 2)
       throw CurateCli.CliUsageError("input-parquet and output-dir are required")
+    if (semanticPlanes < 1 || semanticPlanes > graft.ops.Similarity.MaxPlanes)
+      throw CurateCli.CliUsageError(
+        s"--semantic-planes must be in [1, ${graft.ops.Similarity.MaxPlanes}]")
     val Seq(in, outDir) = pos.toSeq
     def audit(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/audit/$name")
@@ -211,6 +214,8 @@ object ImageCurateCli {
     val pairs = spark.read.parquet(in)
     val cols = pairs.columns.toSeq
     val nInput = pairs.count()
+    // each stage's survivors are bound as a flat relation (see StageBindings)
+    val bind = new StageBindings
 
     // 0. optional byte-exact dedup — sha-256 content identity BEFORE any
     // decode: byte-identical copies (the same CDN asset crawled from many
@@ -222,15 +227,14 @@ object ImageCurateCli {
       // semantics ≡ Multimodal.byteExactDedup (kept set spec-pinned); the
       // inline form exists because the CLI also owes the drop AUDIT: one
       // winners pass (slim (digest, id) shuffle), then ONE left join whose
-      // keep verdict feeds both the audit and the kept cache — the payload
-      // column scans twice total instead of once per consumer
+      // bound keep verdict feeds both the audit and the survivors
       val winners = Multimodal.byteExactWinners(pairs, "bytes", "image_id")
         .select(col("image_id"), lit(true).as("__w"))
-      val flagged = pairs.join(winners, Seq("image_id"), "left")
-        .withColumn("__keep", col("bytes").isNull || coalesce(col("__w"), lit(false)))
+      val flagged = bind(pairs.join(winners, Seq("image_id"), "left")
+        .withColumn("__keep", col("bytes").isNull || coalesce(col("__w"), lit(false))))
       audit(flagged.filter(!col("__keep")).select(col("image_id")),
         "dropped_byte_exact")
-      flagged.filter(col("__keep")).drop("__w", "__keep").cache()
+      flagged.filter(col("__keep")).drop("__w", "__keep")
     }
     val nByte = if (byteExact) preDeduped.count() else nInput
 
@@ -239,15 +243,16 @@ object ImageCurateCli {
     // decodes every row anyway, and the DECODED dimensions (not the
     // recorded w/h, which are untrusted server metadata — a row lying
     // about its resolution must not win its phash group) are the quality
-    // the dedup stages below rank on.
-    val annotated = Multimodal.pairReasonsWithStats(preDeduped, minTokens, maxTokens,
-      minAlpha, minW, minH, maxAspect, minEntropy)
+    // the dedup stages below rank on. Bound once, so the audit and the
+    // survivors share one decode per row.
+    val annotated = bind(Multimodal.pairReasonsWithStats(preDeduped, minTokens,
+      maxTokens, minAlpha, minW, minH, maxAspect, minEntropy))
     audit(annotated.filter(col("reason").isNotNull)
       .select(col("image_id"), col("reason")), "dropped_gates")
     val gated = annotated.filter(col("reason").isNull)
       .withColumn("__dq",
         col("__s.width").cast("long") * col("__s.height").cast("long"))
-      .drop("reason", "__s").cache()
+      .drop("reason", "__s")
     val nGates = gated.count()
 
     // 1b. optional CLIP-score alignment gate: scores come from an
@@ -269,8 +274,7 @@ object ImageCurateCli {
           scoredIds, "image_emb", "caption_emb", alignMin)
         audit(dropped.select(col("image_id"), col("alignment")),
           "dropped_alignment")
-        gated.join(keptIds.select("image_id"), Seq("image_id"), "left_semi")
-          .cache()
+        bind(gated.join(keptIds.select("image_id"), Seq("image_id"), "left_semi"))
     }
     val nAlign = aligned.count()
 
@@ -282,7 +286,6 @@ object ImageCurateCli {
     // the drop re-attaches by anti-join — payload bytes ride nothing.
     // Eval ids are synthesized under the reserved `__eval:` prefix so the
     // two id spaces cannot collide.
-    var decontamFlagged: Option[DataFrame] = None
     val decontamed = decontam match {
       case None => aligned
       case Some(path) =>
@@ -290,15 +293,13 @@ object ImageCurateCli {
           .select(col("phash").cast("long").as("phash")).distinct()
           .select(concat(lit("__eval:"), col("phash")).as("image_id"),
             col("phash"))
-        // cached: the pigeonhole candidate join feeds BOTH the audit
-        // write and the anti-join — without the cache it runs twice
-        val flagged = Multimodal.imageDecontaminate(
+        // bound: the pigeonhole candidate join feeds BOTH the audit
+        // write and the anti-join — unbound it runs twice
+        val flagged = bind(Multimodal.imageDecontaminate(
           aligned.select(col("image_id"), col("phash")), evalSigs,
-          "image_id", "phash", decontamRadius).cache()
-        decontamFlagged = Some(flagged)
+          "image_id", "phash", decontamRadius))
         audit(flagged, "dropped_decontam")
-        aligned.join(flagged.select("image_id"), Seq("image_id"), "left_anti")
-          .cache()
+        bind(aligned.join(flagged.select("image_id"), Seq("image_id"), "left_anti"))
     }
     val nDecontam = if (decontam.isDefined) decontamed.count() else nAlign
 
@@ -309,12 +310,12 @@ object ImageCurateCli {
     // the near-dup candidate join (lossy-robust — the canonical min alone
     // is unstable under re-encode perturbation). One extra decode per
     // gated row, flag-gated; only the slim (id, 8×long) relation is
-    // cached — the payload bytes are never pinned twice.
+    // bound — the payload bytes are never pinned twice.
     val sigMap =
       if (!orientation) null
-      else decontamed.select(col("image_id"),
+      else bind(decontamed.select(col("image_id"),
         graft.functions.ImageFunctions.phash_orientations(col("bytes"))
-          .as("__orients")).cache()
+          .as("__orients")))
     val sigd =
       if (!orientation) decontamed.withColumn("__dsig", col("phash"))
       else decontamed.join(
@@ -327,7 +328,7 @@ object ImageCurateCli {
     val winners = sigd.groupBy(col("__dsig").as("__ph"))
       .agg(max(struct(q.as("__q"), col("image_id").as("__id"))).as("__w"))
       .select(col("__w.__id").as("image_id"))
-    val exact = sigd.join(winners, Seq("image_id"), "left_semi").cache()
+    val exact = bind(sigd.join(winners, Seq("image_id"), "left_semi"))
     audit(sigd.join(winners, Seq("image_id"), "left_anti")
       .select(col("image_id"), col("phash")), "dropped_exact")
     val nExact = exact.count()
@@ -337,7 +338,6 @@ object ImageCurateCli {
     // near-dup component, or its own signature when clustering is off) —
     // the key --split assigns eval membership on, so near-duplicates the
     // configured radius can see never straddle a train/eval boundary.
-    var groupsCache: Option[DataFrame] = None
     val kept0 = nearDup match {
       case None => exact.withColumn("__lbl", col("__dsig"))
       case Some(h) =>
@@ -371,13 +371,12 @@ object ImageCurateCli {
               .filter(!isnan(col("__p")) && col("__p") >= psnrDb)
               .select("d1", "d2")
           }
-        // cached: the candidate-join + components subtree feeds the audit
+        // bound: the candidate-join + components subtree feeds the audit
         // write, the keep join, and (with --caption-cap or --split)
         // further passes over kept0 — one execution of the slim
         // (signature, component) relation, not one per consumer
-        val groups = Dedup.canonicalByQuality(sigs, "__dsig", cand,
-          exact.select(col("__dsig"), q.as("__q")), "__q").cache()
-        groupsCache = Some(groups)
+        val groups = bind(Dedup.canonicalByQuality(sigs, "__dsig", cand,
+          exact.select(col("__dsig"), q.as("__q")), "__q"))
         // audit column named for what the value IS: the stored phash in
         // default mode, the canonical hash under --orientation (naming it
         // "phash" there would invite a join back against the input
@@ -401,8 +400,6 @@ object ImageCurateCli {
     // pixels like every other rung. Rows missing from the inference
     // output pass through unclustered: absence of an embedding is not
     // evidence of uniqueness, and dedup must not silently drop them.
-    var semGroups: Option[DataFrame] = None
-    var semScored: Option[DataFrame] = None
     val nAfterNear = if (semantic.isDefined) kept0.count() else -1L
     val semDeduped = semantic match {
       case None => kept0
@@ -416,13 +413,12 @@ object ImageCurateCli {
         val emb = spark.read.parquet(path)
           .select(col("image_id"), col("image_emb"))
           .groupBy("image_id").agg(max("image_emb").as("image_emb"))
-        // cached: this slim (id, surrogate, embedding) relation appears in
+        // bound: this slim (id, surrogate, embedding) relation appears in
         // the LSH signature build, both candidate re-attach joins, the
         // components corpus AND the dims probe — one shuffle join, not 5
-        val scored = kept0.select(col("image_id"))
+        val scored = bind(kept0.select(col("image_id"))
           .withColumn("__sid", xxhash64(col("image_id")))
-          .join(emb, Seq("image_id")).cache()
-        semScored = Some(scored)
+          .join(emb, Seq("image_id")))
         val dimsOpt = scored
           .select(size(col("image_emb")).as("d")).filter(col("d") > 0)
           .limit(1).collect().headOption.map(_.getInt(0))
@@ -446,10 +442,9 @@ object ImageCurateCli {
             val quality = kept0.select(col("image_id"), col("__dq"))
               .withColumn("__sid", xxhash64(col("image_id")))
               .select(col("__sid"), col("__dq").cast("double").as("__q"))
-            val groups = Dedup.canonicalByQuality(
+            val groups = bind(Dedup.canonicalByQuality(
               scored.select(col("__sid")), "__sid", pairs, quality, "__q",
-              "v1", "v2").cache()
-            semGroups = Some(groups)
+              "v1", "v2"))
             val droppedIds = scored.select(col("image_id"), col("__sid"))
               .join(groups.filter(col("is_kept") === 0), Seq("__sid"))
             audit(droppedIds.select(col("image_id"), col("component")),
@@ -503,16 +498,7 @@ object ImageCurateCli {
     (if (splitSpec.isDefined) curatedWriter.partitionBy("split")
      else curatedWriter).parquet(s"$outDir/curated")
     val nKept = curated.count()
-    exact.unpersist()
-    groupsCache.foreach(_.unpersist())
-    semGroups.foreach(_.unpersist())
-    semScored.foreach(_.unpersist())
-    decontamFlagged.foreach(_.unpersist())
-    if (orientation) sigMap.unpersist()
-    if (decontam.isDefined) decontamed.unpersist()
-    if (align.isDefined) aligned.unpersist()
-    gated.unpersist()
-    if (byteExact) preDeduped.unpersist()
+    bind.release()
 
     // 4. optional training-batch materialization over the CURATED pairs:
     // header-dims banding + pinned resample + complete batches only (see

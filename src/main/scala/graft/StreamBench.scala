@@ -150,12 +150,9 @@ object StreamBench {
       val q = out.writeStream.outputMode("append")
         .option("checkpointLocation", ckptDir.toString)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val b0 = System.nanoTime()
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           graft.operators.ImageWriteback
             .mergeInsertNearDup(table, batch.drop("eventTime"))
-          if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-            println(f"  batch $bid sink ${(System.nanoTime() - b0) / 1e9}%.1f s")
           ()
         }.start()
       q.awaitTermination()

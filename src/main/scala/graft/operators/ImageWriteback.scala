@@ -139,24 +139,15 @@ object ImageWriteback {
     // never cached here); the ContextCleaner reclaims them once the batch
     // DataFrame is unreachable, and a lost block fails-and-retries the
     // trigger (foreachBatch sinks are at-least-once either way).
-    val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (dbg) println(f"    [sink] $label ${(System.nanoTime() - t0) / 1e9}%.1f s @${System.currentTimeMillis}")
-      r
-    }
     // orientation mode: the batch's 8-hash arrays are computed here, once
     // per admitted row, INSIDE the checkpointed relation — both the dup
     // sweep and the MERGE below consume the same materialized arrays, and
     // every inserted row carries its array into the table (self-sustaining)
-    val b = timed("replay+checkpoint batch")({
-      val b0 = if (!orientation) batch
-        else batch.withColumn("phash_orients",
-          graft.functions.ImageFunctions.phash_orientations(col("bytes")))
-      b0.localCheckpoint()
-    })
-    if (table.isEmpty) return timed("mergeInsert(empty)")(
-      table.mergeInsert(b, "phash"))
+    val b = (if (!orientation) batch
+      else batch.withColumn("phash_orients",
+        graft.functions.ImageFunctions.phash_orientations(col("bytes"))))
+      .localCheckpoint()
+    if (table.isEmpty) return table.mergeInsert(b, "phash")
     if (orientation)
       require(table.read().columns.contains("phash_orients"),
         "mergeInsertNearDup(orientation): table has no phash_orients column — " +
@@ -184,7 +175,7 @@ object ImageWriteback {
       // persist each scan re-runs the whole candidate join + PSNR decode
       // subtree. Verified pairs touching one micro-batch are O(batch), so
       // the cache is trigger-bounded like `b` itself.
-      timed("near-dup candidates+PSNR")(dup.count())
+      dup.count()
       // batch ids whose verified pair partner is a CORPUS id: ids are
       // distinct across corpus and delta (the function's contract), so the
       // partner is in the corpus iff it is NOT a batch id — resolved
@@ -195,9 +186,7 @@ object ImageWriteback {
         .join(batchIds, col("image_id") === col("__bid"), "left_semi")
         .join(batchIds, col("__p") === col("__bid"), "left_anti")
         .select("image_id").distinct()
-      if (dbg) timed("dupOfCorpus")(dupOfCorpus.count())
-      timed("merge")(table.mergeInsert(
-        b.join(dupOfCorpus, Seq("image_id"), "left_anti"), "phash"))
+      table.mergeInsert(b.join(dupOfCorpus, Seq("image_id"), "left_anti"), "phash")
     } finally dup.unpersist()
   }
 

@@ -42,10 +42,18 @@ object Similarity {
   private def planeWeights(p: Int, dims: Int): Seq[Double] =
     (0 until dims).map(d => ((p.toLong * 1000003L + d.toLong * 7919L) % 2001L - 1000L).toDouble)
 
-  /** Random-hyperplane LSH signature (`planes` bits) per vector — one
-    * codegen'd dot against each plane's literal weight vector. */
+  /** Plane p sets bit `1L << p`; the JVM shift is mod 64, so past 63
+    * planes two planes would share a bit and recall would silently drop.
+    * 63 also keeps every signature a non-negative long. */
+  private[graft] val MaxPlanes = 63
+
+  /** Random-hyperplane LSH signature (`planes` bits, at most
+    * [[MaxPlanes]]) per vector — one codegen'd dot against each plane's
+    * literal weight vector. */
   def lshSignature(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, dims: Int): DataFrame = {
+    require(planes >= 1 && planes <= MaxPlanes,
+      s"lshSignature: planes=$planes must be in [1, $MaxPlanes]")
     val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
     val sig = (0 until planes).map { p =>
       val d = graft.functions.VectorFunctions.array_dot(
@@ -143,8 +151,9 @@ object Similarity {
     * bucket shuffle; vectors re-attach to the deduplicated candidate set. */
   def lshBandedNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int, dims: Int, threshold: Double): DataFrame = {
-    require(planes >= 1 && bands >= 1,
-      s"lshBandedNearDupPairs: planes=$planes bands=$bands must be >= 1")
+    require(planes >= 1 && planes <= MaxPlanes && bands >= 1,
+      s"lshBandedNearDupPairs: planes=$planes must be in [1, $MaxPlanes], " +
+        s"bands=$bands must be >= 1")
     val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
     // ONE scan of the input: all bands' signatures are computed in a
     // single projection (an array of (band, sig) structs, exploded) — a

@@ -198,6 +198,16 @@ class CurateCliSpec extends AnyFunSuite {
     cases.foreach { a =>
       assertThrows[CurateCli.CliUsageError](CurateCli.run(spark, a))
     }
+    // --near-dup clusters in int64 id space: a string id column would
+    // cast to null and keep nothing, so it fails before any audit is written
+    val sin = Files.createTempDirectory("curate-sid-nd-").toString
+    Seq(("doc-a", "a b c d"), ("doc-b", "a b c e")).toDF("uuid", "text")
+      .write.mode("overwrite").parquet(sin)
+    val sout = Files.createTempDirectory("curate-sid-nd-out-").toString
+    val e = intercept[CurateCli.CliUsageError](CurateCli.run(spark,
+      Array(sin, sout, "--id-col", "uuid", "--near-dup", "0.5")))
+    assert(e.getMessage.contains("--near-dup"), e.getMessage)
+    assert(!new java.io.File(s"$sout/audit").exists())
   }
 
   test("--decontam: docs sharing eval shingles drop before dedup; audit carries overlap") {

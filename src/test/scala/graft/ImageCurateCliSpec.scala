@@ -297,6 +297,11 @@ class ImageCurateCliSpec extends AnyFunSuite {
       .contains("sum to 1"))
     assert(fails(Array("a", "b", "--split", "train:zero,val:1.0"))
       .contains("not a number"))
+    // plane p sets bit 1L << p, which wraps at 64: out-of-range plane
+    // counts fail at parse time, not as silently aliased LSH bits
+    Seq("0", "64", "100").foreach { n =>
+      assert(fails(Array("a", "b", "--semantic-planes", n)).contains("[1, 63]"), n)
+    }
   }
 
   test("--caption-cap: templated caption rationed AFTER dedup, smallest ids win, audit carries frequency") {

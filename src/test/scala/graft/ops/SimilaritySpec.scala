@@ -26,6 +26,17 @@ class SimilaritySpec extends AnyFunSuite {
     assert(approx.select("list").distinct().count() <= 6)
   }
 
+  test("LSH plane counts past 63 are rejected: 1L << p wraps at 64") {
+    val e = Seq((1L, Array(1.0, 0.0))).toDF("id", "v")
+    assertThrows[IllegalArgumentException](
+      Similarity.lshSignature(e, "id", "v", planes = 64, dims = 2))
+    assertThrows[IllegalArgumentException](
+      Similarity.lshBandedNearDupPairs(e, "id", "v", planes = 64, bands = 2, dims = 2,
+        threshold = 0.9))
+    assert(Similarity.lshSignature(e, "id", "v", planes = 63, dims = 2)
+      .select("sig").as[Long].head() >= 0L)
+  }
+
   test("lshNearDupPairs agrees with exact pairs above the threshold (verified subset)") {
     val bounded = emb.filter($"vec_id" < 120)
     val lsh = Similarity.lshNearDupPairs(bounded, "vec_id", "embedding",
