@@ -161,36 +161,6 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, links)
   }
 
-  /** Image decode + quality-analysis hot path (the payload axis' per-byte
-    * CPU profile): scan a generated image corpus from parquet, decode each
-    * PNG/JPG once and run the full quality histogram pass
-    * ([[graft.ops.Multimodal.imageQuality]]). Corpus materialized once,
-    * untimed, so the timed path isolates decode/analysis from generation.
-    * Shuffle-free (one agg) — the image twin of [[parseBench]]. */
-  def imageBench(spark: SparkSession, nImages: Long,
-      corpusPath: String): (Double, Long) = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(corpusPath, "_SUCCESS"))) {
-      spark.range(0, nImages, 1, 32)
-        .map(id => SiteGraph.mix(7L, id)) // decorrelate ids
-        .map(k => graft.sources.ImageGen.imageFor(k & 0xffffff, seed = 7L, dupEvery = 64))
-        .write.mode("overwrite").parquet(corpusPath)
-    }
-    val media = spark.read.parquet(corpusPath)
-      .select($"image_id".as("media_id"), lit("image").as("kind"), $"bytes",
-        typedLit(Map.empty[String, String]).as("meta"))
-      .as[graft.ops.MediaRow]
-    val t0 = System.nanoTime()
-    val row = graft.ops.Multimodal.imageQuality(media)
-      .agg(count(lit(1)), sum(when($"decodable", 1L).otherwise(0L)),
-        sum($"entropy_bits"), sum($"mean_luma"))
-      .head()
-    val n = row.getLong(0)
-    require(row.getLong(1) == n, "undecodable images in the generated corpus")
-    ((System.nanoTime() - t0) / 1e9, n)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -143,11 +143,14 @@ object CardCli {
       parts += s""""resolution_bands":${countsJson(hist)}"""
     }
 
-    // per-stage drop receipts from the audit relations
-    val auditNames = Seq("dropped_quality", "dropped_gates", "dropped_decontam",
-      "dropped_byte_exact", "dropped_alignment", "dropped_exact",
-      "dropped_near_dup", "dropped_semantic", "dropped_caption_cap",
-      "pii_hits", "span_removed")
+    // per-stage drop receipts: one per audit relation the run wrote —
+    // listed, so only the CLIs that write audits know their names
+    val auditDir = new org.apache.hadoop.fs.Path(s"$dir/audit")
+    val auditFs = fs.fs(auditDir)
+    val auditNames =
+      if (!auditFs.exists(auditDir)) Nil
+      else auditFs.listStatus(auditDir).filter(_.isDirectory)
+        .map(_.getPath.getName).sorted.toSeq
     val audits = auditNames.flatMap { name =>
       tableIfExists(s"$dir/audit/$name").map(df => name -> df.count())
     }

@@ -77,7 +77,8 @@ object ImageCurateCli {
       |                   collapses same-content different-pixel re-posts
       |                   (crops, re-renders) that no pixel rung can see.
       |                   Pairs missing from P pass through unclustered
-      |                   (audit: dropped_semantic)
+      |                   (audit: dropped_semantic); every non-empty
+      |                   image_emb in P must have the same width
       |  --semantic-min T Cosine threshold for --semantic (default 0.95)
       |  --semantic-planes N  LSH hyperplanes PER BAND, 1..63 (default 8)
       |  --semantic-bands B   LSH bands (default 8; 8x8 catches ~99% of
@@ -208,6 +209,19 @@ object ImageCurateCli {
       throw CurateCli.CliUsageError(
         s"--semantic-planes must be in [1, ${graft.ops.Similarity.MaxPlanes}]")
     val Seq(in, outDir) = pos.toSeq
+    // the LSH planes are `dims` wide, so one run hashes one embedding
+    // width: the distinct positive widths of the whole --semantic input,
+    // checked before any audit is written (empty or null vectors have no
+    // width and pass through the rung unclustered)
+    val semanticDims = semantic.flatMap { path =>
+      val widths = spark.read.parquet(path)
+        .select(size(col("image_emb")).as("d")).filter(col("d") > 0)
+        .agg(sort_array(collect_set(col("d")))).head().getSeq[Int](0)
+      if (widths.length > 1)
+        throw CurateCli.CliUsageError(
+          s"--semantic: mixed embedding widths ${widths.mkString(", ")}")
+      widths.headOption
+    }
     def audit(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/audit/$name")
 
@@ -415,14 +429,11 @@ object ImageCurateCli {
           .groupBy("image_id").agg(max("image_emb").as("image_emb"))
         // bound: this slim (id, surrogate, embedding) relation appears in
         // the LSH signature build, both candidate re-attach joins, the
-        // components corpus AND the dims probe — one shuffle join, not 5
+        // components corpus — one shuffle join, not 4
         val scored = bind(kept0.select(col("image_id"))
           .withColumn("__sid", xxhash64(col("image_id")))
           .join(emb, Seq("image_id")))
-        val dimsOpt = scored
-          .select(size(col("image_emb")).as("d")).filter(col("d") > 0)
-          .limit(1).collect().headOption.map(_.getInt(0))
-        dimsOpt match {
+        semanticDims match {
           case None =>
             // nothing scorable — still write the (empty) audit: a
             // governance consumer must be able to distinguish "stage ran,

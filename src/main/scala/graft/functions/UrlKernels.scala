@@ -27,23 +27,14 @@ object UrlKernels {
   def urlHost(url: UTF8String): UTF8String =
     UTF8String.fromString(PyUrl.urlparse(url.toString).netloc)
 
-  def urlScheme(url: UTF8String): UTF8String =
-    UTF8String.fromString(PyUrl.urlparse(url.toString).scheme)
-
   def urlPath(url: UTF8String): UTF8String =
     UTF8String.fromString(PyUrl.urlparse(url.toString).path)
-
-  def urlQuery(url: UTF8String): UTF8String =
-    UTF8String.fromString(PyUrl.urlparse(url.toString).query)
 
   def urlSyntacticOk(url: UTF8String): Boolean =
     UrlValidator.syntacticOk(url.toString)
 
   def urlSecurityOk(url: UTF8String): Boolean =
     UrlValidator.securityOk(url.toString)
-
-  def urlSemanticOk(url: UTF8String): Boolean =
-    UrlValidator.semanticOkPure(url.toString)
 
   private val HrefRe = java.util.regex.Pattern.compile(
     "(?is)<a\\b[^>]*?\\bhref\\s*=\\s*(?:\"([^\"]*)\"|'([^']*)'|([^\\s>]+))")

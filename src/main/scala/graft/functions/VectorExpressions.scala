@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{ColumnBridge => CB}
 import org.apache.spark.sql.types._
@@ -36,69 +36,6 @@ object VectorKernels {
     while (i < n) {
       acc += a.getDouble(i) * b.getDouble(i)
       i += 1
-    }
-    acc
-  }
-
-  /** Product-quantization encode: per subspace j, the index of the nearest
-    * (squared-L2) codebook centroid of the j-th subvector. Returns null for
-    * a vector whose length is not `m × dsub` or that carries null elements
-    * — an unencodable vector must gate, not crash or mis-encode.
-    * `codebook(j)(c)` is centroid c of subspace j; codes fit in a byte
-    * (k ≤ 256 enforced at fit time). Ties break to the LOWEST code index
-    * (strict `<`), deterministic under any partitioning. */
-  def pqEncode(v: ArrayData, codebook: Array[Array[Array[Double]]]): Array[Byte] = {
-    val m = codebook.length
-    val dsub = codebook(0)(0).length
-    val n = v.numElements()
-    if (n != m * dsub) return null
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return null
-      i += 1
-    }
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) {
-      val cents = codebook(j)
-      val base = j * dsub
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0.0
-        var t = 0
-        while (t < dsub) {
-          val diff = v.getDouble(base + t) - cent(t)
-          d += diff * diff
-          t += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      out(j) = best.toByte
-      j += 1
-    }
-    out
-  }
-
-  /** Asymmetric-distance (ADC) lookup: the approximate squared L2 between
-    * the query and a PQ-encoded vector is the sum of the per-subspace
-    * precomputed distances `table(j)(code_j)`. Returns NaN for codes of
-    * the wrong length or out of the table's range (NaN fails any `<=`
-    * radius or ordering-based top-k deterministically only if filtered —
-    * callers exclude it the same way the PSNR path does). */
-  def pqAdc(codes: Array[Byte], table: Array[Array[Double]]): Double = {
-    val m = table.length
-    if (codes == null || codes.length != m) return Double.NaN
-    var acc = 0.0
-    var j = 0
-    while (j < m) {
-      val c = codes(j) & 0xff
-      if (c >= table(j).length) return Double.NaN
-      acc += table(j)(c)
-      j += 1
     }
     acc
   }
@@ -136,9 +73,9 @@ trait DoubleArrayInputs { self: BinaryExpression =>
 }
 
 /** Codegen'd dot product of two array<double> columns — the inner loop of
-  * every similarity operator (cosine top-k, LSH signatures/verification,
-  * IVF probes). The HOF formulation it replaces does not participate in
-  * whole-stage codegen (higher-order lambdas are interpreted per element);
+  * every similarity operator (cosine top-k, LSH signatures/verification).
+  * The HOF formulation it replaces does not participate in whole-stage
+  * codegen (higher-order lambdas are interpreted per element);
   * at 10^9 × 64d vectors that interpreter overhead dominates the scan. */
 case class ArrayDot(left: Expression, right: Expression)
     extends BinaryExpression with DoubleArrayInputs {
@@ -160,9 +97,8 @@ case class ArrayDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Codegen'd squared euclidean distance — the IVF quantizer metric (corpus
-  * assignment in build/append scans every vector × nLists centroids; the
-  * probe ranking runs it per query × centroid). */
+/** Codegen'd squared euclidean distance (the SQL-registered
+  * `array_sqdist`). */
 case class ArraySqDist(left: Expression, right: Expression)
     extends BinaryExpression with DoubleArrayInputs {
   override def prettyName: String = "array_sqdist"
@@ -183,76 +119,11 @@ case class ArraySqDist(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Codegen'd product-quantization encoder: array<double> → m-byte code
-  * (BinaryType), one byte per subspace = the nearest codebook centroid by
-  * squared L2. The codebook is plan-embedded config (a reference object in
-  * the generated class, broadcast with the task closure — ~m×k×dsub
-  * doubles, KBs even at k=256), NOT a per-row child: evaluating it per row
-  * as a literal ArrayData would re-walk the nested structure 10^9 times.
-  * Null for null / wrong-length / null-element vectors (gate, not crash). */
-case class PqEncode(child: Expression, codebook: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  override def prettyName: String = "pq_encode"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(v: Any): Any =
-    VectorKernels.pqEncode(v.asInstanceOf[ArrayData], codebook)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCodebook", codebook, "double[][][]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val r = ctx.freshName("pqCode")
-      s"""
-         |byte[] $r = graft.functions.VectorKernels.pqEncode($a, $cb);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-  override protected def withNewChildInternal(c: Expression): PqEncode =
-    copy(child = c)
-}
-
-/** Codegen'd asymmetric-distance lookup: m-byte PQ code → approximate
-  * squared L2 to the query, via the query's precomputed per-subspace
-  * distance table (plan-embedded, m×k doubles). NaN — not null — for
-  * malformed codes, mirroring the PSNR kernel's contract; callers filter
-  * `!isnan` before any ordering. */
-case class PqAdc(child: Expression, table: Array[Array[Double]])
-    extends UnaryExpression {
-  override def prettyName: String = "pq_adc"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BINARY codes, got ${other.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(codes: Any): Any =
-    VectorKernels.pqAdc(codes.asInstanceOf[Array[Byte]], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = ctx.addReferenceObj("pqTable", table, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VectorKernels.pqAdc($a, $t);")
-  }
-  override protected def withNewChildInternal(c: Expression): PqAdc =
-    copy(child = c)
-}
-
 object VectorFunctions {
   def array_dot(a: Column, b: Column): Column =
     CB.column(ArrayDot(CB.expression(a), CB.expression(b)))
   def array_sqdist(a: Column, b: Column): Column =
     CB.column(ArraySqDist(CB.expression(a), CB.expression(b)))
-  def pq_encode(v: Column, codebook: Array[Array[Array[Double]]]): Column =
-    CB.column(PqEncode(CB.expression(v), codebook))
-  def pq_adc(codes: Column, table: Array[Array[Double]]): Column =
-    CB.column(PqAdc(CB.expression(codes), table))
 
   def registerAll(spark: SparkSession): Unit =
     FunctionTable.register(spark, FunctionTable.byName("array_dot", "array_sqdist"))

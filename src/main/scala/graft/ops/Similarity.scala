@@ -63,98 +63,33 @@ object Similarity {
     e.select(col(idCol), col("e"), sig.as("sig"))
   }
 
-  /** ANN candidate pairs via LSH buckets: all-pairs only within a bucket
-    * (shuffle on sig), each verified with the exact cosine.
-    *
-    * Ids-first: only `(sig, id)` rides the bucket shuffle — at 10^9 × 64d,
-    * shipping both embedding arrays through the candidate join would move
-    * two orders of magnitude more bytes than the 16-byte id rows; the
-    * vectors re-attach by id to the (much smaller) candidate set only. */
-  def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      planes: Int, dims: Int, threshold: Double): DataFrame = {
-    val s = lshSignature(emb, idCol, vecCol, planes, dims)
-    val ids = s.select(col("sig"), col(idCol))
-    val l = ids.select(col("sig"), col(idCol).as("v1"))
-    val r = ids.select(col("sig"), col(idCol).as("v2"))
-    val cand = l.join(r, Seq("sig")).filter(col("v1") < col("v2")).select("v1", "v2")
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-    cand
-      .join(e.select(col(idCol).as("v1"), col("e").as("e1")), Seq("v1"))
-      .join(e.select(col(idCol).as("v2"), col("e").as("e2")), Seq("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
-      .select("v1", "v2", "cos")
-  }
-
-  /** IVF (inverted-file) ANN: k-means coarse quantizer over the corpus,
-    * vectors assigned to their nearest centroid's posting list; a query
-    * probes only the `nProbe` nearest lists — at 10^9 vectors the scan
-    * shrinks by ~k/nProbe while recall stays high for clustered data.
-    * Returns the approximate top-k by exact cosine within probed lists.
-    * (KMeans seed fixed — deterministic per Spark version, but not
-    * engine-portable, so this op is ScalaTest-verified by recall against
-    * [[cosineTopK]] rather than oracle-hashed.)
-    *
-    * One-shot form: fits and scans per call. Pipelines serving repeated
-    * queries use [[IvfIndex]] — the same quantizer persisted once
-    * (centroids + list-partitioned assignments), probed many times with
-    * partition-pruned reads and no refit. */
-  def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
-      queryId: Long, k: Int, nLists: Int = 16, nProbe: Int = 4,
-      fitSample: Long = 200000L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-      .withColumn("features", array_to_vector(col("e")))
-    // the quantizer only needs a representative sample — at 10^9 vectors
-    // fitting on the full corpus would iterate the whole table 10×; a
-    // deterministic hash-sample of ~fitSample rows trains centroids of the
-    // same quality (standard IVF practice), then assignment is one pass
-    val nRows = e.count()
-    val train =
-      if (nRows <= fitSample) e
-      else e.filter(pmod(xxhash64(col(idCol)), lit(nRows / fitSample)) === 0)
-    val model = new KMeans().setK(nLists).setSeed(42L).setMaxIter(10).fit(train)
-    val assigned = model.transform(e).withColumnRenamed("prediction", "list")
-
-    // nProbe centroids closest to the query vector (tiny, driver-side)
-    val qVec = e.filter(col(idCol) === queryId).select("e")
-      .head().getSeq[Double](0).toArray
-    val probeLists = model.clusterCenters.zipWithIndex
-      .map { case (c, i) =>
-        val d = c.toArray.zip(qVec).map { case (a, b) => (a - b) * (a - b) }.sum
-        (i, d)
-      }
-      .sortBy(_._2).take(nProbe).map(_._1).toSeq
-
-    val q = e.filter(col(idCol) === queryId).select(col("e").as("qe"))
-    assigned.filter(col("list").isInCollection(probeLists) && col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", round(cosine("e", "qe"), 6))
-      .select(col(idCol), col("cos"), col("list"))
-      .orderBy(desc("cos"), col(idCol))
-      .limit(k)
-  }
-
-  /** Banded (amplified) LSH near-dup pairs — [[lshNearDupPairs]] with the
-    * standard AND-OR construction: `bands` independent `planes`-bit
-    * signatures per vector (band b uses plane indices [b·planes,
-    * (b+1)·planes) of the same deterministic family), candidates = pairs
-    * agreeing on ANY band's full signature, each verified once by exact
-    * cosine. One band of k planes catches a θ-angle pair with probability
-    * (1−θ/π)^k — at cos 0.95 and k=16 that is ~0.18, i.e. a single band
-    * MISSES most threshold-level pairs; B bands amplify to
+  /** LSH near-dup pairs, banded (amplified) by the standard AND-OR
+    * construction: `bands` independent `planes`-bit signatures per vector
+    * (band b uses plane indices [b·planes, (b+1)·planes) of the same
+    * deterministic family), candidates = pairs agreeing on ANY band's full
+    * signature, each verified once by exact cosine. `bands = 1` is plain
+    * single-band LSH. One band of k planes catches a θ-angle pair with
+    * probability (1−θ/π)^k — at cos 0.95 and k=16 that is ~0.18, i.e. a
+    * single band MISSES most threshold-level pairs; B bands amplify to
     * 1−(1−(1−θ/π)^k)^B (k=8, B=8 → ~0.99 at cos 0.95). Precision is owned
     * by the exact-cosine verify, so extra candidates only cost compute.
-    * Ids-first like the single-band form: only (band, sig, id) rides the
-    * bucket shuffle; vectors re-attach to the deduplicated candidate set. */
+    *
+    * Ids-first: only (band, sig, id) rides the bucket shuffle — at 10^9 ×
+    * 64d, shipping both embedding arrays through the candidate join would
+    * move two orders of magnitude more bytes; the vectors re-attach by id
+    * to the deduplicated candidate set only.
+    *
+    * Rows whose vector is null or not `dims` wide are dropped before
+    * signing and never pair: every plane dot of such a vector is null,
+    * so each would sign 0 in every band and the band self-join would be
+    * quadratic in them. */
   def lshBandedNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int, dims: Int, threshold: Double): DataFrame = {
     require(planes >= 1 && planes <= MaxPlanes && bands >= 1,
       s"lshBandedNearDupPairs: planes=$planes must be in [1, $MaxPlanes], " +
         s"bands=$bands must be >= 1")
     val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+      .filter(col("e").isNotNull && size(col("e")) === dims)
     // ONE scan of the input: all bands' signatures are computed in a
     // single projection (an array of (band, sig) structs, exploded) — a
     // union-of-per-band-selects would re-scan the relation `bands` times
@@ -182,21 +117,8 @@ object Similarity {
       .select("v1", "v2", "cos")
   }
 
-  /** SemDeDup-style semantic deduplication: embedding near-dup pairs
-    * (LSH-bucketed candidates verified by exact cosine) clustered into
-    * connected components, exactly one representative kept per cluster.
-    * Output `(idCol, component, is_kept)` over the whole corpus — the
-    * composition a training-data pipeline runs after embedding documents.
-    * The exact-pair variant ([[nearDupPairs]] edges) is the bounded
-    * verification baseline; this form scales because candidates come from
-    * buckets, never all-pairs. */
-  def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
-      planes: Int, dims: Int, threshold: Double): DataFrame =
-    graft.ops.Dedup.dedupComponents(emb, idCol,
-      lshNearDupPairs(emb, idCol, vecCol, planes, dims, threshold), "v1", "v2")
-
   /** Exact cosine near-dup pairs (bounded input — the verification
-    * baseline for [[lshNearDupPairs]]). */
+    * baseline for [[lshBandedNearDupPairs]]). */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))

@@ -450,7 +450,8 @@ object ContractQueries {
   /** SemDeDup-style semantic dedup over embeddings (bounded exact-pair
     * variant): cosine near-dup pairs clustered into components, one vector
     * kept per cluster. The LSH-bucketed scale path is
-    * [[Similarity.semanticDedup]] (SimilaritySpec). */
+    * [[Similarity.lshBandedNearDupPairs]], which `ImageCurateCli
+    * --semantic` clusters the same way (SimilaritySpec). */
   def q36SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val emb = t(spark, dir, "embeddings").filter(col("vec_id") < 200)
     val pairs = Similarity.nearDupPairs(emb, "vec_id", "embedding", threshold = 0.35)

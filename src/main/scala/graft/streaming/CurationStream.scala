@@ -43,6 +43,10 @@ final case class CaptionBudgetState(admitted: Long)
   * the batch exact-dedup pass owns anything older), then per-row quality
   * gates — including the Gopher repetition gate — and PII redaction.
   *
+  * Per-caption state is UNBOUNDED: [[CurationStream.captionBudget]] keeps
+  * one lifetime admitted count per distinct caption and never expires it,
+  * so its state grows with the number of distinct captions ever seen.
+  *
   * Everything after the dedup is STATELESS on purpose: all gates are
   * per-row column programs (token counts, distinct ratio, stopword ratio,
   * repetition stats, regex redaction), append-mode-safe and shuffle-free.
@@ -155,12 +159,14 @@ object CurationStream {
     * caption (boilerplate control wants a lifetime budget, so no state
     * timeout — the same growth class as any seen-filter: one small entry
     * per distinct caption ever admitted-from, and rejected rows never
-    * grow it past the cap). Admission order is arrival order with a
-    * deterministic ascending-`image_id` tiebreak inside each micro-batch
-    * — the streaming analog of the batch cap's ascending-id order; the
-    * batch re-run over the landed table remains the reproducible
-    * artifact. Apply AFTER [[curatePairs]] (its output shape), so gated
-    * and deduped rows never consume budget. */
+    * grow it past the cap). Admission is by id, not arrival: each
+    * micro-batch admits the smallest `image_id`s of the caption, up to
+    * the room left in its budget, wherever in the batch they arrived (a
+    * later row with a smaller id displaces an earlier larger one) — the
+    * streaming analog of the batch cap's ascending-id order, per
+    * micro-batch; the batch re-run over the landed table remains the
+    * reproducible artifact. Apply AFTER [[curatePairs]] (its output
+    * shape), so gated and deduped rows never consume budget. */
   def captionBudget(curated: DataFrame, cap: Int): DataFrame = {
     require(cap >= 1, s"captionBudget: cap=$cap must be >= 1")
     import curated.sparkSession.implicits._

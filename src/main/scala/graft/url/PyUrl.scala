@@ -20,11 +20,7 @@ final case class UrlParts(
     path: String,
     params: String,
     query: String,
-    fragment: String) {
-
-  /** host[:port] — lowercased host portion only on demand by callers. */
-  def hostPort: String = netloc
-}
+    fragment: String)
 
 /** CPython-3.11-compatible URL parsing / joining / quoting primitives. */
 object PyUrl {

@@ -152,9 +152,4 @@ object UrlValidator {
       true
     } catch { case NonFatal(_) => false }
   }
-
-  /** Network-free composite verify: syntactic + pure-semantic + security.
-    * (Protocol/operational stages live at the fetch layer.) */
-  def verifyPure(url: String): Boolean =
-    syntacticOk(url) && semanticOkPure(url) && securityOk(url)
 }

@@ -69,4 +69,16 @@ class CardCliSpec extends AnyFunSuite {
     assert(fails(Array(out, "--bogus")).contains("unknown flag"))
     assert(fails(Array(out, "--top-k", "x")).contains("not a number"))
   }
+
+  test("audits are listed from audit/: a stage no card code names still lands in card.json") {
+    val out = Files.createTempDirectory("cardl-out-").toString
+    Seq((1L, "a b c")).toDF("doc_id", "text").write.parquet(s"$out/curated")
+    Seq(7L, 8L, 9L).toDF("doc_id").write.parquet(s"$out/audit/dropped_new_stage")
+    Seq(1L).toDF("doc_id").write.parquet(s"$out/audit/dropped_quality")
+    // a stray file next to the audit relations is not an audit
+    Files.write(java.nio.file.Paths.get(out, "audit", "notes.txt"), "x".getBytes("UTF-8"))
+
+    val json = CardCli.run(spark, Array(out))
+    assert(json.contains(""""audits":{"dropped_new_stage":3,"dropped_quality":1}"""), json)
+  }
 }

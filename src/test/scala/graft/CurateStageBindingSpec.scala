@@ -3,15 +3,13 @@ package graft
 import graft.functions.TestSpark
 import java.nio.file.Files
 import org.apache.spark.TestListenerBus
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import scala.collection.mutable.ArrayBuffer
 
 /** CurateCli binds each stage's survivors as a flat relation
   * (`StageBindings`). Over one `--near-dup --decontam --split
@@ -39,23 +37,6 @@ class CurateStageBindingSpec extends AnyFunSuite {
     8L -> (good(3, "u") + " " + evalText),               // eval leak
     9L -> good(11, "v"))
 
-  /** The final plan of every execution `body` ran. */
-  private def executedPlans[T](body: => T): (T, Seq[SparkPlan]) = {
-    val plans = ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    TestListenerBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val r = body
-      TestListenerBus.drain(spark.sparkContext)
-      (r, plans.synchronized(plans.toList))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   /** Every operator under `p`: AQE stages through their plans, cached
     * relations through the plan that built them, subqueries included. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
@@ -73,9 +54,9 @@ class CurateStageBindingSpec extends AnyFunSuite {
     Seq(9000L -> evalText).toDF("doc_id", "text").write.mode("overwrite")
       .parquet(eval.toString)
     val out = Files.createTempDirectory("curate-bind-out-").toString
-    val (s, plans) = executedPlans(CurateCli.run(spark, Array(in.toString, out,
-      "--near-dup", "0.5", "--decontam", eval.toString,
-      "--split", "train:0.8,val:0.1,test:0.1", "--pack-budget", "64")))
+    val (s, plans) = TestListenerBus.executedPlans(spark)(CurateCli.run(spark,
+      Array(in.toString, out, "--near-dup", "0.5", "--decontam", eval.toString,
+        "--split", "train:0.8,val:0.1,test:0.1", "--pack-budget", "64")))
     assert(s.droppedQuality == 2 && s.droppedDecontam == 1 && s.droppedDup == 2 &&
       s.kept == 4, s.toString)
 

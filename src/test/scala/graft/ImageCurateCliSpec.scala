@@ -302,6 +302,23 @@ class ImageCurateCliSpec extends AnyFunSuite {
     Seq("0", "64", "100").foreach { n =>
       assert(fails(Array("a", "b", "--semantic-planes", n)).contains("[1, 63]"), n)
     }
+    // one run hashes one embedding width: mixed widths in the --semantic
+    // input fail before any stage runs, naming the widths; empty vectors
+    // have no width and do not count
+    val cap = "a photo of a red barn"
+    val in = Files.createTempDirectory("imgusage-in-").toString
+    Seq(("a", content(1)), ("b", content(3))).map { case (id, bs) =>
+        (id, bs, 40, 30, "png", cap, ImageKernels.phash64(bs)) }
+      .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+      .write.mode("overwrite").parquet(in)
+    val embDir = Files.createTempDirectory("imgusage-emb-").toString
+    Seq(("a", Seq(1.0, 0.0, 0.0, 0.0)), ("b", Seq.fill(8)(0.5)),
+        ("c", Seq.empty[Double]))
+      .toDF("image_id", "image_emb").write.mode("overwrite").parquet(embDir)
+    val out = Files.createTempDirectory("imgusage-out-").toString
+    assert(fails(Array(in, out, "--byte-exact", "--semantic", embDir))
+      .contains("mixed embedding widths 4, 8"))
+    assert(!Files.exists(java.nio.file.Paths.get(out, "audit")))
   }
 
   test("--caption-cap: templated caption rationed AFTER dedup, smallest ids win, audit carries frequency") {

@@ -71,46 +71,7 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     val dupPairs = Similarity.nearDupPairs(rawFeats, "vid", "embedding", threshold = 0.999999)
     assert(dupPairs.count() > 0, "planted duplicates not detected pre-MERGE")
 
-    // 6. the serving path: persist an IVF index over the table's features
-    // and batch-query every stored vector against it — each must find its
-    // exact-ANN neighborhood without any refit (the index is on disk; the
-    // query only reads probed posting lists)
-    val idxDir = Files.createTempDirectory("pipeline-ivf-").toString
-    val idx = graft.ops.IvfIndex.build(spark, idxDir, keyed, "vid", "embedding",
-      nLists = 4)
-    val probeIds = keyed.select($"vid").as[Long].take(3).toSeq
-    val queries = keyed.filter($"vid".isInCollection(probeIds))
-      .select($"vid".as("qid"), $"embedding".as("qe"))
-    val served = graft.ops.IvfIndex.load(spark, idxDir)
-      .topKBatch(queries, "qid", "qe", k = 3, nProbe = 2)
-    val perQuery = served.groupBy("qid").count().select("count").as[Long].collect()
-    assert(perQuery.length == 3 && perQuery.forall(_ > 0),
-      "persisted index did not serve all batch queries")
-
-    // 7. incremental epoch: a later crawl delivers new images — their
-    // features go into the SAME index via append (frozen quantizer, no
-    // refit, no rebuild) and are immediately servable: an appended vector
-    // queried with self-inclusion finds itself at cosine 1.0
-    val epoch2 = (0 until 12).map(i =>
-      ImageGen.imageFor(500L + i, seed = 77L, dupEvery = 1000)
-        .copy(image_id = s"epoch2-$i"))
-    val epoch2Feats = Multimodal.extractFeatures(
-        epoch2.toDS().select("image_id", "bytes").as[(String, Array[Byte])]
-          .map { case (id, bytes) => MediaRow(id, "image", bytes, Map.empty) })
-      .map(f => (f.media_id, f.feature.map(_.toDouble))).toDF("image_id", "embedding")
-      .withColumn("vid", xxhash64($"image_id"))
-    val grown = graft.ops.IvfIndex.load(spark, idxDir)
-    grown.append(epoch2Feats, "vid", "embedding")
-    val newQid = epoch2Feats.select($"vid").head().getLong(0)
-    val self = grown.topKBatch(
-        epoch2Feats.filter($"vid" === newQid)
-          .select($"vid".as("qid"), $"embedding".as("qe")),
-        "qid", "qe", k = 1, nProbe = 2, excludeQueryIds = false)
-      .filter($"rk" === 1).select("id", "cos").head()
-    assert(self.getLong(0) == newQid && self.getDouble(1) == 1.0,
-      "appended epoch's vector not servable from the grown index")
-
-    // 8. group-level dedup as the relational twin of the MERGE: phash
+    // 6. group-level dedup as the relational twin of the MERGE: phash
     // hamming components over the RAW (pre-MERGE) payload rows must keep
     // exactly as many canonical images as the MERGE stored — the same
     // planted duplicates collapse whether dedup runs as MERGE-INTO on the
@@ -123,7 +84,7 @@ class PipelineIntegrationSpec extends AnyFunSuite {
     assert(groups.filter($"is_kept" === 1).count() == stored.count(),
       "components keep-one disagrees with MERGE-on-phash dedup")
 
-    // 9. incremental epoch through the DEDUP path (the daily-increment
+    // 7. incremental epoch through the DEDUP path (the daily-increment
     // loop): epoch-2 images — half genuinely new, half byte-duplicates of
     // epoch-1 content — pair against the STANDING corpus via
     // hammingPairsIncremental (no corpus×corpus), fold into the epoch-1

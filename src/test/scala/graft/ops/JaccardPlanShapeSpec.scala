@@ -3,12 +3,10 @@ package graft.ops
 import graft.functions.TestSpark
 import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import scala.collection.mutable.ArrayBuffer
 import scala.math.BigDecimal.RoundingMode
 
 /** Plan shape of the jaccard pair generators on CurateCli's input shape: a
@@ -47,23 +45,6 @@ class JaccardPlanShapeSpec extends AnyFunSuite {
       Seq("doc_id"))
   }
 
-  /** `body`'s result and the final plan of every execution it ran. */
-  private def executedPlans[T](body: => T): (T, Seq[SparkPlan]) = {
-    val plans = ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized(plans += qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    TestListenerBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val r = body
-      TestListenerBus.drain(spark.sparkContext)
-      (r, plans.synchronized(plans.toList))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   /** Generate operators that ran: a reused stage is a leaf and counts 0. */
   private def generates(p: SparkPlan): Int = p match {
     case a: AdaptiveSparkPlanExec => generates(a.executedPlan)
@@ -96,7 +77,7 @@ class JaccardPlanShapeSpec extends AnyFunSuite {
     val rows = texts()
     val input = cliShaped(rows)
     val survivors = rows.filter { case (d, _) => d < 1000L }
-    val (got, plans) = executedPlans(collectPairs(
+    val (got, plans) = TestListenerBus.executedPlans(spark)(collectPairs(
       Dedup.jaccardPairs(input, "doc_id", "text", threshold, maxDf, ngram = 2)))
     assert(plans.map(generates).sum == 1, plans.map(generates))
     assert(got == expected(survivors))
@@ -108,7 +89,7 @@ class JaccardPlanShapeSpec extends AnyFunSuite {
     val isDelta = (d: Long) => d < 30L || d >= 1000L
     val corpus = cliShaped(rows.filter { case (d, _) => !isDelta(d) })
     val delta = cliShaped(rows.filter { case (d, _) => isDelta(d) })
-    val (got, plans) = executedPlans(collectPairs(
+    val (got, plans) = TestListenerBus.executedPlans(spark)(collectPairs(
       Dedup.jaccardPairsIncremental(corpus, delta, "doc_id", "text", threshold, maxDf,
         ngram = 2)))
     assert(plans.map(generates).sum == 2, plans.map(generates))

@@ -1,29 +1,47 @@
 package graft.ops
 
 import graft.functions.TestSpark
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ANN operators over the driver testdata embeddings: the IVF scale path
-  * must recall most of the exact brute-force top-k while scanning only the
-  * probed posting lists; LSH buckets must agree with the exact cosine on
-  * verification. */
+/** LSH near-dup pairs over the driver testdata embeddings and a planted
+  * near-dup corpus: bucketed candidates must agree with the exact cosine on
+  * verification, banding must amplify recall over a single band, and rows
+  * with no usable vector must neither pair nor inflate the band join. */
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  test("ivfTopK: probed-list ANN recalls most of the exact top-k") {
-    val k = 10
-    val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", queryId = 3L, k)
-      .select("vec_id").as[Long].collect().toSet
-    val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", queryId = 3L, k,
-      nLists = 16, nProbe = 6)
-    val got = approx.select("vec_id").as[Long].collect().toSet
-    val recall = exact.intersect(got).size.toDouble / k
-    assert(recall >= 0.5, s"IVF recall too low: $recall (got=$got exact=$exact)")
-    // probed less than the whole corpus: every result from ≤ nProbe lists
-    assert(approx.select("list").distinct().count() <= 6)
+  private val dims = 32
+
+  /** Planted near-dup corpus in the regime the semantic rung targets
+    * (cos ≥ ~0.95 — the testdata embeddings have no pairs above 0.5):
+    * 40 random base directions × 5 small perturbations each. */
+  private def plantedCorpus(): DataFrame = {
+    val rnd = new scala.util.Random(2026L)
+    val rows = (0 until 40).flatMap { c =>
+      val base = Array.fill(dims)(rnd.nextGaussian())
+      (0 until 5).map { j =>
+        val v = base.map(_ + 0.05 * rnd.nextGaussian())
+        ((c * 5 + j).toLong, Option(v.toSeq))
+      }
+    }
+    rows.toDF("vec_id", "embedding")
+  }
+
+  /** `number of output rows` of every executed join keyed on `band`. */
+  private def bandJoinRows(p: SparkPlan): Seq[Long] = p match {
+    case a: AdaptiveSparkPlanExec => bandJoinRows(a.executedPlan)
+    case q: QueryStageExec => bandJoinRows(q.plan)
+    case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band")) =>
+      j.metrics("numOutputRows").value +: j.children.flatMap(bandJoinRows)
+    case o => o.children.flatMap(bandJoinRows)
   }
 
   test("LSH plane counts past 63 are rejected: 1L << p wraps at 64") {
@@ -37,10 +55,10 @@ class SimilaritySpec extends AnyFunSuite {
       .select("sig").as[Long].head() >= 0L)
   }
 
-  test("lshNearDupPairs agrees with exact pairs above the threshold (verified subset)") {
+  test("single-band LSH (bands = 1) agrees with exact pairs above the threshold (verified subset)") {
     val bounded = emb.filter($"vec_id" < 120)
-    val lsh = Similarity.lshNearDupPairs(bounded, "vec_id", "embedding",
-      planes = 4, dims = 64, threshold = 0.3)
+    val lsh = Similarity.lshBandedNearDupPairs(bounded, "vec_id", "embedding",
+      planes = 4, bands = 1, dims = 64, threshold = 0.3)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     val exact = Similarity.nearDupPairs(bounded, "vec_id", "embedding", threshold = 0.3)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
@@ -53,32 +71,20 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("lshBandedNearDupPairs: amplification recovers high-cosine pairs single-band LSH misses; still a verified subset") {
-    // planted near-dup corpus in the regime the semantic rung targets
-    // (cos ≥ ~0.95 — the testdata embeddings have no pairs above 0.5):
-    // 40 random base directions × 5 small perturbations each
-    val rnd = new scala.util.Random(2026L)
-    val dims = 32
-    val rows = (0 until 40).flatMap { c =>
-      val base = Array.fill(dims)(rnd.nextGaussian())
-      (0 until 5).map { j =>
-        val v = base.map(_ + 0.05 * rnd.nextGaussian())
-        ((c * 5 + j).toLong, v.toSeq)
-      }
-    }
-    val planted = rows.toDF("vec_id", "embedding")
+    val planted = plantedCorpus()
     val exact = Similarity.nearDupPairs(planted, "vec_id", "embedding", 0.95)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     assert(exact.size >= 100, s"fixture premise: planted pairs, got ${exact.size}")
-    val single = Similarity.lshNearDupPairs(planted, "vec_id", "embedding",
-      planes = 8, dims = dims, threshold = 0.95)
+    val single = Similarity.lshBandedNearDupPairs(planted, "vec_id", "embedding",
+      planes = 8, bands = 1, dims = dims, threshold = 0.95)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     val banded = Similarity.lshBandedNearDupPairs(planted, "vec_id",
       "embedding", planes = 8, bands = 8, dims = dims, threshold = 0.95)
       .select("v1", "v2").as[(Long, Long)].collect().toSet
     // precision is owned by the cosine verify: both are subsets of exact
     assert(single.subsetOf(exact) && banded.subsetOf(exact))
-    // band 0 of the banded form IS the single-band form (same plane
-    // family), so amplification can only add candidates
+    // band 0 of the 8-band form IS the 1-band form (same plane family),
+    // so amplification can only add candidates
     assert(single.subsetOf(banded))
     // the AND-OR construction amplifies: ≥90% recall at the default 8×8
     // where one 8-plane band misses a large share of the same pairs
@@ -89,10 +95,11 @@ class SimilaritySpec extends AnyFunSuite {
       s"amplification added nothing: single=${single.size} banded=${banded.size}")
   }
 
-  test("semanticDedup: LSH-found clusters collapse to their minimum, nothing invents edges") {
+  test("single-band LSH pairs → components: clusters collapse to their minimum, nothing invents edges") {
     val bounded = emb.filter($"vec_id" < 120)
-    val got = Similarity.semanticDedup(bounded, "vec_id", "embedding",
-      planes = 4, dims = 64, threshold = 0.3)
+    val got = Dedup.dedupComponents(bounded, "vec_id",
+      Similarity.lshBandedNearDupPairs(bounded, "vec_id", "embedding",
+        planes = 4, bands = 1, dims = 64, threshold = 0.3), "v1", "v2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     // one row per corpus vector; every component label is a member's min
     assert(got.length == bounded.count())
@@ -102,7 +109,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(members.count(_._3 == 1) == 1)
     }
     // components refine the EXACT near-dup components: any two vectors the
-    // semantic dedup merged really are connected by verified-cosine pairs
+    // LSH pairs merged really are connected by verified-cosine pairs
     val exactPairs = Similarity.nearDupPairs(bounded, "vec_id", "embedding", 0.3)
       .select("v1", "v2").as[(Long, Long)].collect()
     val exactComp = Dedup.connectedComponents(
@@ -110,7 +117,28 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     got.foreach { case (id, c, _) =>
       if (id != c) assert(exactComp.getOrElse(id, id) == exactComp.getOrElse(c, c),
-        s"semanticDedup merged $id into $c but exact components disagree")
+        s"LSH components merged $id into $c but exact components disagree")
     }
+  }
+
+  test("null and empty vectors are dropped before signing: no hot bucket in the band join, same pairs") {
+    val valid = plantedCorpus()
+    val junk = (0 until 400).map(i =>
+      (10000L + i, if (i < 200) None else Option(Seq.empty[Double])))
+      .toDF("vec_id", "embedding")
+    def run(in: DataFrame): (Set[(Long, Long)], Long) = {
+      val (pairs, plans) = TestListenerBus.executedPlans(spark)(
+        Similarity.lshBandedNearDupPairs(in, "vec_id", "embedding",
+          planes = 8, bands = 8, dims = dims, threshold = 0.95)
+          .select("v1", "v2").as[(Long, Long)].collect().toSet)
+      val rows = plans.flatMap(bandJoinRows)
+      assert(rows.nonEmpty, "no band join in the executed plans")
+      (pairs, rows.sum)
+    }
+    val (validPairs, validRows) = run(valid)
+    assert(validPairs.nonEmpty, "fixture produced no pairs")
+    // unfiltered, each junk row signs 0 in every band: at least
+    // C(400, 2) × 8 candidate rows more than the valid corpus's own
+    assert(run(valid.union(junk)) == ((validPairs, validRows)))
   }
 }
