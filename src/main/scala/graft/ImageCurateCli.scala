@@ -296,10 +296,9 @@ object ImageCurateCli {
     // contaminated row can never become its phash group's keep-best
     // winner. Signature space only: the corpus side contributes its slim
     // (image_id, stored-phash) projection, the eval side is the cheap
-    // delta of the pigeonhole join (benchmarks are tiny vs a crawl), and
+    // probe of the pigeonhole join (benchmarks are tiny vs a crawl), and
     // the drop re-attaches by anti-join — payload bytes ride nothing.
-    // Eval ids are synthesized under the reserved `__eval:` prefix so the
-    // two id spaces cannot collide.
+    // Eval ids are synthesized under the reserved `__eval:` prefix.
     val decontamed = decontam match {
       case None => aligned
       case Some(path) =>
@@ -366,25 +365,12 @@ object ImageCurateCli {
             val sigRel = exact.select(col("image_id"), col("__dsig"))
               .join(sigMap, Seq("image_id"))
               .select(col("__dsig"), explode(col("__orients")).as("__oh"))
-            Dedup.hammingPairs(sigRel, "__dsig", "__oh", h)
-              .groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
+            Multimodal.closestOrientation(Dedup.hammingPairs(sigRel, "__dsig", "__oh", h))
           }
         val cand =
           if (psnrDb <= 0) cand0.select("d1", "d2")
-          else {
-            val a = exact.select(col("__dsig").as("d1"), col("bytes").as("__ba"))
-            val b = exact.select(col("__dsig").as("d2"), col("bytes").as("__bb"))
-            val pv =
-              if (orientation) graft.functions.ImageFunctions
-                .image_psnr_oriented(col("__ba"), col("__bb"))
-              else graft.functions.ImageFunctions
-                .image_psnr(col("__ba"), col("__bb"))
-            cand0.join(a, Seq("d1")).join(b, Seq("d2"))
-              .withColumn("__p", pv)
-              // NaN (size mismatch) orders above every number — exclude
-              .filter(!isnan(col("__p")) && col("__p") >= psnrDb)
-              .select("d1", "d2")
-          }
+          else Multimodal.psnrVerified(cand0, exact, "__dsig", "bytes", psnrDb, orientation)
+            .select("d1", "d2")
         // bound: the candidate-join + components subtree feeds the audit
         // write, the keep join, and (with --caption-cap or --split)
         // further passes over kept0 — one execution of the slim

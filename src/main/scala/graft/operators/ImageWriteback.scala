@@ -70,15 +70,6 @@ object ImageWriteback {
         col("w").cast("long") * col("h")): (Long, Long) =
     table.mergeUpsertBest(payloadRows(outcome.found, pages, images), "phash", quality)
 
-  /** Pair-gated writeback — the batch twin of the streaming
-    * `curatePairs` path: the fetched payload passes the FULL
-    * image+caption ladder ([[graft.ops.Multimodal.pairReasons]] — caption
-    * gates, container-trust sniff against the claimed `fmt`, decoded
-    * quality stats) before the MERGE, so pairs with bad captions, lying
-    * content types, or degenerate pixels never enter the snapshot table.
-    * Returns (inserted count, audit — one row per rejected pair with its
-    * first failing reason). Single relation pass: the annotation and both
-    * splits come from one projection, no join-back needed. */
   /** `foreachBatch` MERGE sink with incremental NEAR-dup suppression — the
     * piece that closes the streaming gap: `curatePairs`' keyed state only
     * dedups EXACT phashes inside the watermark, so a hamming-1..6
@@ -159,16 +150,12 @@ object ImageWriteback {
     val dup = (if (!orientation)
         graft.ops.Multimodal.verifiedPhashDupIncremental(
           corpus, b, "image_id", "bytes",
-          maxHamming = maxHamming, minPsnrDb = minPsnrDb, deltaPhashCol = "phash",
-          // per-trigger shape: candidates checkpoint eagerly so the corpus
-          // bytes attach is ONE semi-join-pruned scan (see the scaladoc there)
-          materializeCandidates = true)
+          maxHamming = maxHamming, minPsnrDb = minPsnrDb, deltaPhashCol = "phash")
       else
         graft.ops.Multimodal.verifiedOrientationDupIncremental(
           corpus, b, "image_id", "bytes", orientsCol = "phash_orients",
           maxHamming = maxHamming, minPsnrDb = minPsnrDb,
-          deltaOrientsCol = "phash_orients",
-          materializeCandidates = true))
+          deltaOrientsCol = "phash_orients"))
       .persist()
     try {
       // `dup` is scanned twice below (both pair orientations); without the
@@ -190,6 +177,15 @@ object ImageWriteback {
     } finally dup.unpersist()
   }
 
+  /** Pair-gated writeback — the batch twin of the streaming
+    * `curatePairs` path: the fetched payload passes the FULL
+    * image+caption ladder ([[graft.ops.Multimodal.pairReasons]] — caption
+    * gates, container-trust sniff against the claimed `fmt`, decoded
+    * quality stats) before the MERGE, so pairs with bad captions, lying
+    * content types, or degenerate pixels never enter the snapshot table.
+    * Returns (inserted count, audit — one row per rejected pair with its
+    * first failing reason). Single relation pass: the annotation and both
+    * splits come from one projection, no join-back needed. */
   def ingestCuratedPairs(outcome: CrawlOutcome, pages: Dataset[PageRow],
       images: Dataset[ImageRow], table: IceLite,
       minTokens: Int = 3, maxTokens: Int = 128, minAlphaRatio: Double = 0.5,

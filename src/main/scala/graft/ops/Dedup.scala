@@ -84,17 +84,6 @@ object Dedup {
       sig.select(col(idCol), col(s"band$b").as("band"))).reduce(_ unionByName _)
   }
 
-  /** Shared skew guard of both minhash forms: buckets whose population
-    * exceeds the cap are dropped whole (one shared implementation so the
-    * incremental path can never diverge from the batch semantics). */
-  private def capBands(bands0: DataFrame, maxBandPopulation: Long): DataFrame =
-    if (maxBandPopulation == Long.MaxValue) bands0
-    else {
-      val keep = bands0.groupBy("band").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBandPopulation).select("band")
-      bands0.join(keep, Seq("band")) // AQE broadcasts the small keep side
-    }
-
   /** LSH candidate pairs: documents sharing any MinHash band bucket.
     * The join is per-bucket (shuffle on band), not all-pairs.
     *
@@ -106,13 +95,9 @@ object Dedup {
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP,
-      maxBandPopulation: Long = Long.MaxValue): DataFrame = {
-    val bands = capBands(bandBuckets(df, idCol, textCol, perms, p), maxBandPopulation)
-    val l = bands.select(col("band"), col(idCol).as("d1"))
-    val r = bands.select(col("band"), col(idCol).as("d2"))
-    l.join(r, Seq("band")).filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-  }
+      maxBandPopulation: Long = Long.MaxValue): DataFrame =
+    CandidatePairs.pairs(bandBuckets(df, idCol, textCol, perms, p), Seq("band"), idCol,
+      maxPopulation = maxBandPopulation).distinct()
 
   /** Incremental LSH candidates: the [[minhashCandidatePairs]] of
     * `corpus ∪ delta` that touch the delta, generated by joining only the
@@ -124,27 +109,18 @@ object Dedup {
   def minhashCandidatePairsIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP,
-      maxBandPopulation: Long = Long.MaxValue): DataFrame = {
-    val bands = capBands(
-      bandBuckets(corpus, idCol, textCol, perms, p)
-        .unionByName(bandBuckets(delta, idCol, textCol, perms, p)),
-      maxBandPopulation)
-    val deltaIds = delta.select(col(idCol)).distinct()
-    val l = bands.join(deltaIds, Seq(idCol)).select(col("band"), col(idCol).as("x"))
-    val r = bands.select(col("band"), col(idCol).as("y"))
-    l.join(r, Seq("band")).filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("d1"), greatest(col("x"), col("y")).as("d2"))
-      .distinct()
-  }
+      maxBandPopulation: Long = Long.MaxValue): DataFrame =
+    CandidatePairs.pairs(CandidatePairs.tag(bandBuckets(corpus, idCol, textCol, perms, p),
+        bandBuckets(delta, idCol, textCol, perms, p)), Seq("band"), idCol,
+      CandidatePairs.Delta, maxBandPopulation).distinct()
 
   /** Audit relation for [[minhashCandidatePairs]]' cap: the over-populated
     * band buckets that were dropped, with their populations. */
   def hotBands(df: DataFrame, idCol: String, textCol: String,
       maxBandPopulation: Long,
       perms: Seq[(Long, Long)] = DefaultPerms, p: Long = DefaultP): DataFrame =
-    bandBuckets(df, idCol, textCol, perms, p)
-      .groupBy("band").agg(count(lit(1)).as("population"))
-      .filter(col("population") > maxBandPopulation)
+    CandidatePairs.hotKeys(bandBuckets(df, idCol, textCol, perms, p), Seq("band"),
+      maxBandPopulation)
 
   /** SimHash over distinct-token hash bits (default 16 bits). */
   def simhash(df: DataFrame, idCol: String, textCol: String, bits: Int = 16): DataFrame = {
@@ -157,29 +133,33 @@ object Dedup {
     withSums.select(col(idCol), sig.as("simhash"))
   }
 
-  /** Shared pigeonhole-block construction + skew cap of both hamming
-    * forms: the signature splits into maxHamming+1 bit blocks, and block
-    * values shared by more than the cap are dropped whole (a block value
-    * shared by n documents emits O(n²) candidates). One implementation so
-    * the incremental path stays bit-identical to the batch semantics. */
-  private def sigBlocks(sig: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, bits: Int, maxBlockPopulation: Long): DataFrame = {
+  /** The key emitter of every hamming form — pigeonhole blocks: the
+    * signature splits into maxHamming+1 bit blocks, one
+    * `(idCol, __sig, blk, bval)` row per block. `idCol` may be `sigCol`. */
+  private[graft] def sigBlocks(sig: DataFrame, idCol: String, sigCol: String,
+      maxHamming: Int, bits: Int): DataFrame = {
     val nBlocks = maxHamming + 1
     val bounds = (0 to nBlocks).map(i => i * bits / nBlocks)
-    val blocks0 = (0 until nBlocks).map { b =>
+    (0 until nBlocks).map { b =>
       val lo = bounds(b)
       val w = bounds(b + 1) - lo
       val mask = if (w >= 64) lit(-1L) else lit((1L << w) - 1)
       sig.select(col(idCol), col(sigCol).as("__sig"), lit(b).as("blk"),
         shiftright(col(sigCol), lo).bitwiseAND(mask).as("bval"))
     }.reduce(_ unionByName _)
-    if (maxBlockPopulation == Long.MaxValue) blocks0
-    else {
-      val keep = blocks0.groupBy("blk", "bval").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBlockPopulation).select("blk", "bval")
-      blocks0.join(keep, Seq("blk", "bval"))
-    }
   }
+
+  /** The verifier of every hamming form: candidates of [[sigBlocks]] keys
+    * within the radius by exact popcount, one `(d1, d2, hamming)` row per
+    * pair. Block values shared by more than the cap are dropped whole (a
+    * block value shared by n signatures emits O(n²) candidates). */
+  private[graft] def hammingVerified(blocks: DataFrame, idCol: String, maxHamming: Int,
+      maxBlockPopulation: Long, mode: CandidatePairs.Mode): DataFrame =
+    CandidatePairs.pairs(blocks, Seq("blk", "bval"), idCol, mode, maxBlockPopulation,
+        Seq("__sig"))
+      .withColumn("hamming", bit_count(col("__sig1").bitwiseXOR(col("__sig2"))))
+      .filter(col("hamming") <= maxHamming)
+      .select("d1", "d2", "hamming").distinct() // pairs meet in several blocks
 
   /** Near-duplicate pairs of any int64 signature column within a hamming
     * radius, bucketed by pigeonhole: the signature's bits split into
@@ -192,15 +172,9 @@ object Dedup {
     */
   def hammingPairs(sig: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int = 3, bits: Int = 64,
-      maxBlockPopulation: Long = Long.MaxValue): DataFrame = {
-    val blocks = sigBlocks(sig, idCol, sigCol, maxHamming, bits, maxBlockPopulation)
-    val l = blocks.select(col("blk"), col("bval"), col(idCol).as("d1"), col("__sig").as("s1"))
-    val r = blocks.select(col("blk"), col("bval"), col(idCol).as("d2"), col("__sig").as("s2"))
-    l.join(r, Seq("blk", "bval")).filter(col("d1") < col("d2"))
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("d1", "d2", "hamming").distinct()
-  }
+      maxBlockPopulation: Long = Long.MaxValue): DataFrame =
+    hammingVerified(sigBlocks(sig, idCol, sigCol, maxHamming, bits), idCol, maxHamming,
+      maxBlockPopulation, CandidatePairs.Self)
 
   /** Incremental hamming near-dup pairs: the [[hammingPairs]] of
     * `corpusSig ∪ deltaSig` that touch the delta, generated by joining only
@@ -212,21 +186,10 @@ object Dedup {
     * inputs. */
   def hammingPairsIncremental(corpusSig: DataFrame, deltaSig: DataFrame,
       idCol: String, sigCol: String, maxHamming: Int = 3, bits: Int = 64,
-      maxBlockPopulation: Long = Long.MaxValue): DataFrame = {
-    val all = corpusSig.select(col(idCol), col(sigCol))
-      .unionByName(deltaSig.select(col(idCol), col(sigCol)))
-    val blocks = sigBlocks(all, idCol, sigCol, maxHamming, bits, maxBlockPopulation)
-    val deltaIds = deltaSig.select(col(idCol)).distinct()
-    val l = blocks.join(deltaIds, Seq(idCol))
-      .select(col("blk"), col("bval"), col(idCol).as("x"), col("__sig").as("s1"))
-    val r = blocks.select(col("blk"), col("bval"), col(idCol).as("y"), col("__sig").as("s2"))
-    l.join(r, Seq("blk", "bval")).filter(col("x") =!= col("y"))
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(least(col("x"), col("y")).as("d1"),
-        greatest(col("x"), col("y")).as("d2"), col("hamming"))
-      .distinct() // delta–delta pairs arrive in both orientations
-  }
+      maxBlockPopulation: Long = Long.MaxValue): DataFrame =
+    hammingVerified(CandidatePairs.tag(sigBlocks(corpusSig, idCol, sigCol, maxHamming, bits),
+        sigBlocks(deltaSig, idCol, sigCol, maxHamming, bits)), idCol, maxHamming,
+      maxBlockPopulation, CandidatePairs.Delta)
 
   /** SimHash near-duplicate pairs within a hamming radius — [[simhash]]
     * signatures fed through the generic [[hammingPairs]] pigeonhole join. */
@@ -235,17 +198,6 @@ object Dedup {
       maxBlockPopulation: Long = Long.MaxValue): DataFrame =
     hammingPairs(simhash(df, idCol, textCol, bits), idCol, "simhash",
       maxHamming, bits, maxBlockPopulation)
-
-  /** Shared stopword/skew cap of both jaccard forms: tokens with document
-    * frequency above the cap leave the universe BEFORE sizes are computed
-    * (one implementation so the incremental path can never diverge). */
-  private def capTokensByDf(toks0: DataFrame, maxDf: Long): DataFrame =
-    if (maxDf == Long.MaxValue) toks0
-    else {
-      val keep = toks0.groupBy("token").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") <= maxDf).select("token")
-      toks0.join(keep, Seq("token")) // AQE broadcasts the small keep side
-    }
 
   /** Token-set Jaccard similarity for all pairs sharing ≥1 token; rounded to
     * 6 places. Candidate generation is by token co-occurrence (shuffle on
@@ -269,9 +221,10 @@ object Dedup {
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
     // bind the distinct shingle relation ONCE, before the df cap. The
-    // capped relation is referenced 4 times below (both self-join sides,
-    // `sizes` twice) and the cap references its input twice more, so an
-    // unbound plan derives the shingles 8 times. AQE's stage reuse hides
+    // capped relation is referenced 4 times in [[jaccardVerified]] (both
+    // self-join sides, `sizes` twice) and the cap references its input
+    // twice more, so an unbound plan derives the shingles 8 times. AQE's
+    // stage reuse hides
     // most of that on a plain parquet input (5 reused exchanges, 2
     // shingle Generates in the final plan), but it misses when the input
     // holds a join that AQE re-plans at run time — CurateCli's input, the
@@ -283,19 +236,7 @@ object Dedup {
     // input) makes the generator's cost independent of the caller's plan
     // shape.
     val shingles = shingleTokens(df, idCol, textCol, ngram).localCheckpoint(true)
-    val toks = capTokensByDf(shingles, maxDf)
-    val sizes = toks.groupBy(idCol).agg(count(lit(1)).as("sz"))
-    val l = toks.select(col("token"), col(idCol).as("d1"))
-    val r = toks.select(col("token"), col(idCol).as("d2"))
-    val inter = l.join(r, Seq("token")).filter(col("d1") < col("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("d1"), col("sz").as("sz1")), Seq("d1"))
-      .join(sizes.select(col(idCol).as("d2"), col("sz").as("sz2")), Seq("d2"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz1") + col("sz2") - col("inter")).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("d1", "d2", "jaccard")
+    jaccardVerified(shingles, idCol, threshold, maxDf, CandidatePairs.Self)
   }
 
   /** Incremental near-dup pairs: exactly the [[jaccardPairs]] of
@@ -305,34 +246,30 @@ object Dedup {
     * generation joins delta-side posting lists against the full relation
     * (cost ∝ |delta| × list length, not |corpus|²), while set sizes, the
     * document-frequency cap, and the Jaccard denominator are all computed
-    * over the FULL universe so scores equal the batch recompute bit-exactly
-    * (delta–delta pairs appear under both join orientations and are
-    * canonicalized before counting). Ids must be distinct across the two
-    * inputs. Like [[jaccardPairs]], the call runs one job that binds the
-    * shingle relation of `corpus ∪ delta` once. */
+    * over the FULL universe so scores equal the batch recompute bit-exactly.
+    * Ids must be distinct across the two inputs. Like [[jaccardPairs]], the
+    * call runs one job that binds the shingle relation of `corpus ∪ delta`
+    * once. */
   def jaccardPairsIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxDf: Long = Long.MaxValue, ngram: Int = 1): DataFrame = {
     // bound once for the reason given in jaccardPairs
-    val shingles = shingleTokens(corpus, idCol, textCol, ngram)
-      .unionByName(shingleTokens(delta, idCol, textCol, ngram))
-      .localCheckpoint(true)
-    val allToks = capTokensByDf(shingles, maxDf)
-    val deltaIds = delta.select(col(idCol)).distinct()
-    val deltaToks = allToks.join(deltaIds, Seq(idCol)) // capped delta side
-    val sizes = allToks.groupBy(idCol).agg(count(lit(1)).as("sz"))
-    val l = deltaToks.select(col("token"), col(idCol).as("x"))
-    val r = allToks.select(col("token"), col(idCol).as("y"))
-    val inter = l.join(r, Seq("token")).filter(col("x") =!= col("y"))
-      .select(col("token"), least(col("x"), col("y")).as("d1"),
-        greatest(col("x"), col("y")).as("d2"))
-      .distinct() // delta–delta pairs arrive in both orientations
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("d1"), col("sz").as("sz1")), Seq("d1"))
-      .join(sizes.select(col(idCol).as("d2"), col("sz").as("sz2")), Seq("d2"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz1") + col("sz2") - col("inter")).cast("double"), 6))
+    val shingles = CandidatePairs.tag(shingleTokens(corpus, idCol, textCol, ngram),
+      shingleTokens(delta, idCol, textCol, ngram)).localCheckpoint(true)
+    jaccardVerified(shingles, idCol, threshold, maxDf, CandidatePairs.Delta)
+  }
+
+  /** The Jaccard verifier over a bound `(idCol, token)` relation: the
+    * shared-token count of each candidate pair over set sizes, both taken
+    * in the df-capped universe. */
+  private def jaccardVerified(shingles: DataFrame, idCol: String, threshold: Double,
+      maxDf: Long, mode: CandidatePairs.Mode): DataFrame = {
+    val toks = CandidatePairs.capped(shingles, Seq("token"), maxDf)
+    val sizes = toks.groupBy(idCol).agg(count(lit(1)).as("sz"))
+    CandidatePairs.attach(CandidatePairs.sharedKeys(toks, Seq("token"), idCol, mode),
+        sizes, idCol, "sz")
+      .withColumn("jaccard", round(col("shared").cast("double") /
+        (col("sz1") + col("sz2") - col("shared")).cast("double"), 6))
       .filter(col("jaccard") >= threshold)
       .select("d1", "d2", "jaccard")
   }
@@ -345,9 +282,8 @@ object Dedup {
     * vocabulary. */
   def hotTokens(df: DataFrame, idCol: String, textCol: String, maxDf: Long,
       ngram: Int = 1): DataFrame =
-    shingleTokens(df, idCol, textCol, ngram)
-      .groupBy("token").agg(count(lit(1)).as("doc_freq"))
-      .filter(col("doc_freq") > maxDf)
+    CandidatePairs.hotKeys(shingleTokens(df, idCol, textCol, ngram), Seq("token"), maxDf)
+      .withColumnRenamed("population", "doc_freq")
 
   /** Connected components over an undirected pair relation — the stage that
     * turns near-dup PAIRS into dedup GROUPS (a↔b and b↔c must collapse into

@@ -270,37 +270,12 @@ object Multimodal {
       ph.select(col(idCol), col("phash")), idCol, maxHamming, maxBlockPopulation)
     val cand =
       if (dhashMaxHamming < 0) cand0
-      else {
-        val da = ph.select(col(idCol).as("d1"), col("dhash").as("__da"))
-        val db = ph.select(col(idCol).as("d2"), col("dhash").as("__db"))
-        cand0.join(da, Seq("d1")).join(db, Seq("d2"))
-          .filter(bit_count(col("__da").bitwiseXOR(col("__db"))) <= dhashMaxHamming)
-          .drop("__da", "__db")
-      }
-    val a = images.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = images.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr(col("__ba"), col("__bb")))
-      // Spark SQL orders NaN ABOVE every number, so `psnr_db >= min` alone
-      // would admit size-mismatched/undecodable pairs — exclude explicitly
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+      else CandidatePairs.attach(cand0, ph, idCol, "dhash")
+        .filter(bit_count(col("dhash1").bitwiseXOR(col("dhash2"))) <= dhashMaxHamming)
+        .drop("dhash1", "dhash2")
+    psnrVerified(cand, images, idCol, bytesCol, minPsnrDb, oriented = false)
   }
 
-  /** Incremental [[verifiedPhashDup]]: the verified pairs of
-    * `corpus ∪ delta` that TOUCH the delta (a new image batch against the
-    * standing snapshot table), candidate generation via
-    * [[graft.ops.Dedup.hammingPairsIncremental]] — cost ∝ delta × posting
-    * lists, never corpus². Delta phashes are computed here; the standing
-    * corpus should supply its stored `phash` column (`phashCol`) so the
-    * daily increment never re-decodes the corpus — corpus bytes are read
-    * only for the candidate pairs' PSNR checks. Equals the batch
-    * [[verifiedPhashDup]] restricted to delta-touching pairs (spec-pinned).
-    * Ids must be distinct across the inputs. A delta that ALREADY carries
-    * a phash column (the streaming curation path computed one via
-    * `image_sig`) passes its name as `deltaPhashCol` to skip the
-    * per-batch re-decode. */
   /** Orientation-dup pairs: the [[verifiedPhashDup]] construction with
     * the signature set replaced by ALL 8 dihedral orientation phashes
     * (`phash_orientations` — ONE decode per image) and the verifier by
@@ -334,31 +309,37 @@ object Multimodal {
     val sig = images.select(col(idCol),
       explode(graft.functions.ImageFunctions.phash_orientations(col(bytesCol)))
         .as("__oh"))
-    // one candidate pair per image pair: different orientation pairs can
-    // meet at different distances — keep the closest (same-id pairs are
-    // already excluded by the d1 < d2 convention inside hammingPairs)
-    val cand = Dedup.hammingPairs(sig, idCol, "__oh", maxHamming,
-        maxBlockPopulation = maxBlockPopulation)
-      .groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
-    val a = images.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = images.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr_oriented(col("__ba"), col("__bb")))
-      // NaN sorts above every number in Spark SQL — exclude explicitly
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+    psnrVerified(closestOrientation(Dedup.hammingPairs(sig, idCol, "__oh", maxHamming,
+        maxBlockPopulation = maxBlockPopulation)),
+      images, idCol, bytesCol, minPsnrDb, oriented = true)
   }
 
+  /** Incremental [[verifiedPhashDup]]: the verified pairs of
+    * `corpus ∪ delta` that TOUCH the delta (a new image batch against the
+    * standing snapshot table), candidate generation via
+    * [[graft.ops.Dedup.hammingPairsIncremental]] — cost ∝ delta × posting
+    * lists, never corpus². Delta phashes are computed here; the standing
+    * corpus should supply its stored `phash` column (`phashCol`) so the
+    * daily increment never re-decodes the corpus — corpus bytes are read
+    * only for the candidate pairs' PSNR checks. Equals the batch
+    * [[verifiedPhashDup]] restricted to delta-touching pairs (spec-pinned).
+    * Ids must be distinct across the inputs. A delta that ALREADY carries
+    * a phash column (the streaming curation path computed one via
+    * `image_sig`) passes its name as `deltaPhashCol` to skip the
+    * per-batch re-decode. */
   def verifiedPhashDupIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, bytesCol: String, phashCol: String = "phash",
       maxHamming: Int = 6, minPsnrDb: Double = 40.0,
       maxBlockPopulation: Long = Long.MaxValue,
-      deltaPhashCol: String = "",
-      materializeCandidates: Boolean = false): DataFrame =
-    verifiedDupIncrementalCore(corpus, delta, idCol, bytesCol, phashCol,
-      maxHamming, minPsnrDb, maxBlockPopulation, deltaPhashCol,
-      materializeCandidates)
+      deltaPhashCol: String = ""): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val deltaSig =
+      if (deltaPhashCol.nonEmpty) col(deltaPhashCol)
+      else graft.functions.ImageFunctions.phash64(col(bytesCol))
+    verifiedDupIncremental(corpus, delta, corpus.select(col(idCol), col(phashCol).as("__h")),
+      delta.select(col(idCol), deltaSig.as("__h")), idCol, bytesCol, maxHamming,
+      minPsnrDb, maxBlockPopulation, oriented = false)
+  }
 
   /** [[verifiedOrientationDup]], incrementally: delta vs a standing corpus
     * whose 8-element ORIENTATION hash arrays are already stored
@@ -369,78 +350,66 @@ object Multimodal {
     * hamming-join the EXPLODED arrays (the lossy-robust signature set —
     * see [[verifiedOrientationDup]] for why the canonical min alone loses
     * perturbed pairs); verification is the orientation-aware PSNR. Same
-    * scale shape and `materializeCandidates` per-trigger option as the
-    * plain incremental path. */
+    * scale shape as the plain incremental path. */
   def verifiedOrientationDupIncremental(corpus: DataFrame, delta: DataFrame,
       idCol: String, bytesCol: String, orientsCol: String = "phash_orients",
       maxHamming: Int = 6, minPsnrDb: Double = 40.0,
       maxBlockPopulation: Long = Long.MaxValue,
-      deltaOrientsCol: String = "",
-      materializeCandidates: Boolean = false): DataFrame = {
+      deltaOrientsCol: String = ""): DataFrame = {
     import org.apache.spark.sql.functions._
-    val corpusSig = corpus.select(col(idCol),
-      explode(col(orientsCol)).as("__oh"))
-    val deltaSig =
-      if (deltaOrientsCol.nonEmpty)
-        delta.select(col(idCol), explode(col(deltaOrientsCol)).as("__oh"))
-      else delta.select(col(idCol),
-        explode(graft.functions.ImageFunctions.phash_orientations(col(bytesCol)))
-          .as("__oh"))
-    val cand0 = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__oh",
-        maxHamming, bits = 64, maxBlockPopulation = maxBlockPopulation)
-      .groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
-    val cand = if (materializeCandidates) cand0.localCheckpoint() else cand0
-    val bytesRel0 = corpus.select(col(idCol), col(bytesCol))
-      .unionByName(delta.select(col(idCol), col(bytesCol)))
-    val bytesRel = if (materializeCandidates) {
-      val candIds = cand.select(col("d1").as(idCol))
-        .unionByName(cand.select(col("d2").as(idCol))).distinct()
-      bytesRel0.join(candIds, Seq(idCol), "left_semi")
-    } else bytesRel0
-    val a = bytesRel.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = bytesRel.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr_oriented(col("__ba"), col("__bb")))
-      .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
-      .select("d1", "d2", "hamming", "psnr_db")
+    val deltaOrients =
+      if (deltaOrientsCol.nonEmpty) col(deltaOrientsCol)
+      else graft.functions.ImageFunctions.phash_orientations(col(bytesCol))
+    verifiedDupIncremental(corpus, delta,
+      corpus.select(col(idCol), explode(col(orientsCol)).as("__h")),
+      delta.select(col(idCol), explode(deltaOrients).as("__h")), idCol, bytesCol,
+      maxHamming, minPsnrDb, maxBlockPopulation, oriented = true)
   }
 
-  private def verifiedDupIncrementalCore(corpus: DataFrame, delta: DataFrame,
-      idCol: String, bytesCol: String, phashCol: String,
-      maxHamming: Int, minPsnrDb: Double,
-      maxBlockPopulation: Long,
-      deltaPhashCol: String,
-      materializeCandidates: Boolean): DataFrame = {
+  /** Both incremental verified forms over `(idCol, __h)` signature rows
+    * (one per image, or one per orientation when `oriented`). The
+    * candidate relation is signature-space SMALL by construction (bounded
+    * by the duplicate density × delta size, and capped by
+    * maxBlockPopulation), so it is bound eagerly and the bytes attach
+    * semi-join-prunes the payload scan to candidate ids — ONE pruned pass
+    * over the payload column instead of two full ones. */
+  private def verifiedDupIncremental(corpus: DataFrame, delta: DataFrame,
+      corpusSig: DataFrame, deltaSig: DataFrame, idCol: String, bytesCol: String,
+      maxHamming: Int, minPsnrDb: Double, maxBlockPopulation: Long,
+      oriented: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
-    val corpusSig = corpus.select(col(idCol), col(phashCol).as("__ph"))
-    val deltaSig =
-      if (deltaPhashCol.nonEmpty) delta.select(col(idCol), col(deltaPhashCol).as("__ph"))
-      else delta.select(col(idCol),
-        graft.functions.ImageFunctions.phash64(col(bytesCol)).as("__ph"))
-    val cand0 = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__ph",
+    val hp = Dedup.hammingPairsIncremental(corpusSig, deltaSig, idCol, "__h",
       maxHamming, bits = 64, maxBlockPopulation = maxBlockPopulation)
-    // `materializeCandidates` is the per-trigger (streaming sink) shape:
-    // the candidate relation is signature-space SMALL by construction
-    // (bounded by the planted-duplicate density × delta size, and capped
-    // by maxBlockPopulation), so an eager localCheckpoint lets the bytes
-    // attach below semi-join-prune the corpus scan to candidate ids —
-    // ONE pruned pass over the payload column instead of two full ones.
-    // The default (lazy) keeps the one-action batch-sweep plan: there the
-    // whole result is consumed once and Catalyst sees a single tree.
-    val cand = if (materializeCandidates) cand0.localCheckpoint() else cand0
-    val bytesRel0 = corpus.select(col(idCol), col(bytesCol))
+    val cand = (if (oriented) closestOrientation(hp) else hp).localCheckpoint()
+    val candIds = cand.select(col("d1").as(idCol))
+      .unionByName(cand.select(col("d2").as(idCol))).distinct()
+    val bytes = corpus.select(col(idCol), col(bytesCol))
       .unionByName(delta.select(col(idCol), col(bytesCol)))
-    val bytesRel = if (materializeCandidates) {
-      val candIds = cand.select(col("d1").as(idCol))
-        .unionByName(cand.select(col("d2").as(idCol))).distinct()
-      bytesRel0.join(candIds, Seq(idCol), "left_semi")
-    } else bytesRel0
-    val a = bytesRel.select(col(idCol).as("d1"), col(bytesCol).as("__ba"))
-    val b = bytesRel.select(col(idCol).as("d2"), col(bytesCol).as("__bb"))
-    cand.join(a, Seq("d1")).join(b, Seq("d2"))
-      .withColumn("psnr_db",
-        graft.functions.ImageFunctions.image_psnr(col("__ba"), col("__bb")))
+      .join(candIds, Seq(idCol), "left_semi")
+    psnrVerified(cand, bytes, idCol, bytesCol, minPsnrDb, oriented)
+  }
+
+  /** One candidate per image pair of orientation-hash pairs: different
+    * orientation pairs can meet at different distances — keep the closest
+    * (same-id pairs are already excluded by the kernel). */
+  private[graft] def closestOrientation(hammingPairs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    hammingPairs.groupBy("d1", "d2").agg(min(col("hamming")).as("hamming"))
+  }
+
+  /** The pixel verifier of every phash-family generator: payload bytes
+    * attach to the `(d1, d2, hamming)` candidates by id, and a pair
+    * survives iff its PSNR (orientation-aware when `oriented`) is
+    * `>= minPsnrDb`. Output `(d1, d2, hamming, psnr_db)`. */
+  private[graft] def psnrVerified(cand: DataFrame, bytes: DataFrame, idCol: String,
+      bytesCol: String, minPsnrDb: Double, oriented: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.functions.ImageFunctions.{image_psnr, image_psnr_oriented}
+    val (b1, b2) = (col(bytesCol + "1"), col(bytesCol + "2"))
+    CandidatePairs.attach(cand, bytes, idCol, bytesCol)
+      .withColumn("psnr_db", if (oriented) image_psnr_oriented(b1, b2) else image_psnr(b1, b2))
+      // Spark SQL orders NaN ABOVE every number, so `psnr_db >= min` alone
+      // would admit size-mismatched/undecodable pairs — exclude explicitly
       .filter(!isnan(col("psnr_db")) && col("psnr_db") >= minPsnrDb)
       .select("d1", "d2", "hamming", "psnr_db")
   }
@@ -532,31 +501,21 @@ object Multimodal {
     * canonical hash (which also catches mirrored/rotated benchmark
     * re-posts).
     *
-    * Candidates come from the delta-vs-corpus pigeonhole join
-    * ([[Dedup.hammingPairsIncremental]], eval set as the delta), so the
-    * join cost is ∝ eval-set size — benchmarks are tiny relative to a
-    * training corpus, exactly the asymmetry [[TextOps.contamination]]
-    * exploits — and the corpus is never self-joined. Ids must be distinct
-    * across the two inputs (different id spaces). Returns one row per
-    * CONTAMINATED corpus id: (idCol, n_eval_hits, min_hamming). */
+    * Candidates come from the kernel's eval mode over pigeonhole blocks
+    * (eval signatures probe the corpus's; no eval–eval pair), so the join
+    * cost is ∝ eval-set size — benchmarks are tiny relative to a training
+    * corpus, exactly the asymmetry [[TextOps.contamination]] exploits —
+    * and the corpus is never self-joined. Corpus and eval ids may overlap.
+    * Returns one row per CONTAMINATED corpus id: (idCol, n_eval_hits,
+    * min_hamming). */
   def imageDecontaminate(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       sigCol: String, maxHamming: Int = 3,
       maxBlockPopulation: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.functions._
-    val pairs = Dedup.hammingPairsIncremental(
-      corpus.select(col(idCol), col(sigCol)),
-      evalSet.select(col(idCol), col(sigCol)),
-      idCol, sigCol, maxHamming, bits = 64, maxBlockPopulation)
-    // every pair touches the eval side and the corpus never self-joins, so
-    // each pair is corpus–eval or eval–eval; unpivot to ends and anti-join
-    // the eval ids away — what survives is one row per (corpus, eval) hit
-    val evalIds = evalSet.select(col(idCol).as("__eid")).distinct()
-    val ends = pairs.select(explode(array(
-        struct(col("d1").as("m"), col("hamming")),
-        struct(col("d2").as("m"), col("hamming")))).as("e"))
-      .select(col("e.m").as(idCol), col("e.hamming").as("hamming"))
-    ends.join(evalIds, ends(idCol) === evalIds("__eid"), "left_anti")
-      .groupBy(idCol)
+    def blocks(sig: DataFrame) = Dedup.sigBlocks(sig, idCol, sigCol, maxHamming, bits = 64)
+    Dedup.hammingVerified(CandidatePairs.tag(blocks(corpus), blocks(evalSet)), idCol,
+        maxHamming, maxBlockPopulation, CandidatePairs.Eval)
+      .groupBy(col("d1").as(idCol))
       .agg(count(lit(1)).as("n_eval_hits"),
         min("hamming").cast("long").as("min_hamming"))
   }
@@ -719,45 +678,6 @@ object Multimodal {
       alignmentScore(col(imgEmbCol), col(capEmbCol)))
     (scored.filter(col(scoreCol) >= minScore),
       scored.filter(col(scoreCol).isNull || col(scoreCol) < minScore))
-  }
-
-  /** Joint image+caption curation over an image-table DataFrame (the
-    * IceLite shape: id + bytes + caption): caption gates first — pure
-    * column predicates, no decode — then [[imageQuality]] gates on the
-    * caption-passing survivors only. Returns (kept, audit) where the audit
-    * has one row per dropped pair with its FIRST failing reason (caption
-    * reasons before image reasons, because that is the evaluation order a
-    * 100 TB run wants: the cheap gate prunes the expensive decoder's
-    * input). Payload bytes never ride the audit shuffle — the keep side is
-    * an anti-join on the id. */
-  def curateCaptionedImages(images: DataFrame, idCol: String, bytesCol: String,
-      captionCol: String, minTokens: Int = 3, maxTokens: Int = 128,
-      minAlphaRatio: Double = 0.5, minW: Int = 32, minH: Int = 32,
-      maxAspect: Double = 4.0, minEntropyBits: Double = 1.0)
-      : (DataFrame, DataFrame) = {
-    import images.sparkSession.implicits._
-    import org.apache.spark.sql.functions._
-    val idType = images.schema(idCol).dataType
-    val capAudit = images.select(col(idCol),
-        captionReason(col(captionCol), minTokens, maxTokens, minAlphaRatio)
-          .as("reason"))
-      .filter(col("reason").isNotNull)
-    val capOk = images.join(capAudit.select(col(idCol)), Seq(idCol), "left_anti")
-    val media = capOk
-      .select(col(idCol).cast("string").as("_id"), col(bytesCol).as("_b"))
-      .as[(String, Array[Byte])]
-      .map { case (id, b) => MediaRow(id, "image", b, Map.empty) }
-    val q = imageQuality(media).toDF()
-    val imgAudit = q.withColumn("reason",
-        when(!col("decodable"), "undecodable")
-          .when(col("width") < minW || col("height") < minH, "too_small")
-          .when(col("aspect") > maxAspect, "extreme_aspect")
-          .when(col("entropy_bits") < minEntropyBits, "low_entropy"))
-      .filter(col("reason").isNotNull)
-      .select(col("media_id").cast(idType).as(idCol), col("reason"))
-    val audit = capAudit.unionByName(imgAudit)
-    val kept = images.join(audit.select(col(idCol)), Seq(idCol), "left_anti")
-    (kept, audit)
   }
 
   /** Aspect-ratio bucketing for training-batch assembly (the standard

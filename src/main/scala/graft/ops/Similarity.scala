@@ -54,14 +54,19 @@ object Similarity {
       planes: Int, dims: Int): DataFrame = {
     require(planes >= 1 && planes <= MaxPlanes,
       s"lshSignature: planes=$planes must be in [1, $MaxPlanes]")
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-    val sig = (0 until planes).map { p =>
+    emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+      .select(col(idCol), col("e"), bandSig(0, planes, dims).as("sig"))
+  }
+
+  /** Band `b`'s `planes`-bit signature of the `e` column: plane indices
+    * [b·planes, (b+1)·planes) of the deterministic family, one codegen'd
+    * dot each. */
+  private def bandSig(b: Int, planes: Int, dims: Int): Column =
+    (0 until planes).map { p =>
       val d = graft.functions.VectorFunctions.array_dot(
-        col("e"), typedLit(planeWeights(p, dims)))
+        col("e"), typedLit(planeWeights(b * planes + p, dims)))
       when(d > 0, lit(1L << p)).otherwise(0L)
     }.reduce(_ + _)
-    e.select(col(idCol), col("e"), sig.as("sig"))
-  }
 
   /** LSH near-dup pairs, banded (amplified) by the standard AND-OR
     * construction: `bands` independent `planes`-bit signatures per vector
@@ -79,55 +84,57 @@ object Similarity {
     * move two orders of magnitude more bytes; the vectors re-attach by id
     * to the deduplicated candidate set only.
     *
-    * Rows whose vector is null or not `dims` wide are dropped before
-    * signing and never pair: every plane dot of such a vector is null,
-    * so each would sign 0 in every band and the band self-join would be
-    * quadratic in them. */
+    * Rows whose vector is null, not `dims` wide or of zero norm are
+    * dropped before signing and never pair: every plane dot of such a
+    * vector is null or 0, so each would sign 0 in every band — the band
+    * self-join would be quadratic in them, and a zero-norm pair would
+    * reach the cosine's 0/0. */
   def lshBandedNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int, dims: Int, threshold: Double): DataFrame = {
+    val e = verifiable(emb, idCol, vecCol).filter(size(col("e")) === dims)
+    val cand = CandidatePairs.pairs(bandSignatures(e, idCol, planes, bands, dims),
+      Seq("band", "sig"), idCol).distinct() // a pair may collide in several bands
+    cosineVerified(CandidatePairs.attach(cand, e, idCol, "e"), threshold)
+  }
+
+  /** The banded-LSH key emitter: one `(band, sig, idCol)` row per band of
+    * each `e` vector. */
+  private[graft] def bandSignatures(e: DataFrame, idCol: String, planes: Int, bands: Int,
+      dims: Int): DataFrame = {
     require(planes >= 1 && planes <= MaxPlanes && bands >= 1,
       s"lshBandedNearDupPairs: planes=$planes must be in [1, $MaxPlanes], " +
         s"bands=$bands must be >= 1")
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-      .filter(col("e").isNotNull && size(col("e")) === dims)
     // ONE scan of the input: all bands' signatures are computed in a
     // single projection (an array of (band, sig) structs, exploded) — a
     // union-of-per-band-selects would re-scan the relation `bands` times
-    val sigStructs = (0 until bands).map { b =>
-      val sig = (0 until planes).map { p =>
-        val d = graft.functions.VectorFunctions.array_dot(
-          col("e"), typedLit(planeWeights(b * planes + p, dims)))
-        when(d > 0, lit(1L << p)).otherwise(0L)
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), sig.as("sig"))
-    }
-    val ids = e
-      .select(col(idCol), explode(array(sigStructs: _*)).as("bs"))
+    val sigStructs = (0 until bands).map(b =>
+      struct(lit(b).as("band"), bandSig(b, planes, dims).as("sig")))
+    e.select(col(idCol), explode(array(sigStructs: _*)).as("bs"))
       .select(col("bs.band").as("band"), col("bs.sig").as("sig"), col(idCol))
-    val l = ids.select(col("band"), col("sig"), col(idCol).as("v1"))
-    val r = ids.select(col("band"), col("sig"), col(idCol).as("v2"))
-    val cand = l.join(r, Seq("band", "sig")).filter(col("v1") < col("v2"))
-      .select("v1", "v2").distinct() // a pair may collide in several bands
-    cand
-      .join(e.select(col(idCol).as("v1"), col("e").as("e1")), Seq("v1"))
-      .join(e.select(col(idCol).as("v2"), col("e").as("e2")), Seq("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
-      .select("v1", "v2", "cos")
   }
 
+  /** `(idCol, e)` rows a cosine can score: a null vector has a null and
+    * a zero vector a zero norm, and 0/0 throws under ANSI mode. */
+  private def verifiable(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
+      .filter(dot("e", "e") > 0)
+
+  /** The cosine verifier: pairs carrying both vectors (`e1`, `e2`) scored
+    * and kept at `cos >= threshold`, as `(v1, v2, cos)`. */
+  private def cosineVerified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("cos", round(cosine("e1", "e2"), 6))
+      .filter(col("cos") >= threshold)
+      .select(col("d1").as("v1"), col("d2").as("v2"), col("cos"))
+
   /** Exact cosine near-dup pairs (bounded input — the verification
-    * baseline for [[lshBandedNearDupPairs]]). */
+    * baseline for [[lshBandedNearDupPairs]]). Null and zero-norm vectors
+    * never pair, as there. */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-    val l = e.select(col(idCol).as("v1"), col("e").as("e1"))
-    val r = e.select(col(idCol).as("v2"), col("e").as("e2"))
-    l.crossJoin(r).filter(col("v1") < col("v2"))
-      .withColumn("cos", round(
-        dot("e1", "e2") / (sqrt(dot("e1", "e1")) * sqrt(dot("e2", "e2"))), 6))
-      .filter(col("cos") >= threshold)
-      .select("v1", "v2", "cos")
+    val e = verifiable(emb, idCol, vecCol)
+    val l = e.select(col(idCol).as("d1"), col("e").as("e1"))
+    val r = e.select(col(idCol).as("d2"), col("e").as("e2"))
+    cosineVerified(l.crossJoin(r).filter(col("d1") < col("d2")), threshold)
   }
 }

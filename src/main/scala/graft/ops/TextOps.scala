@@ -139,22 +139,22 @@ object TextOps {
   /** Benchmark decontamination: corpus documents sharing at least
     * `minShared` distinct word n-grams with any document of the evaluation
     * set are flagged (with their worst-offending overlap and how many eval
-    * docs they hit). The join is on shingle tokens with the EVAL side as
-    * the posting-list build side — benchmarks are tiny relative to a
-    * training corpus, so Catalyst broadcasts them and the corpus side
-    * streams map-only; the corpus is never shuffled. */
+    * docs they hit). The join is the kernel's eval mode on shingle tokens:
+    * eval shingles probe the corpus's, with the EVAL side as the
+    * posting-list build side — benchmarks are tiny relative to a training
+    * corpus, so Catalyst broadcasts them and the corpus side streams
+    * map-only; the corpus is never shuffled. Corpus and eval ids may
+    * overlap. */
   def contamination(corpus: DataFrame, evalSet: DataFrame, idCol: String,
-      textCol: String, ngram: Int = 3, minShared: Long = 2): DataFrame = {
-    val c = Dedup.shingleTokens(corpus, idCol, textCol, ngram)
-    val e = Dedup.shingleTokens(evalSet, idCol, textCol, ngram)
-      .withColumnRenamed(idCol, "eval_id")
-    c.join(e, Seq("token"))
-      .groupBy(idCol, "eval_id").agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .groupBy(idCol).agg(
-        max("n_shared").as("max_shared"),
+      textCol: String, ngram: Int = 3, minShared: Long = 2): DataFrame =
+    CandidatePairs.sharedKeys(CandidatePairs.tag(
+        Dedup.shingleTokens(corpus, idCol, textCol, ngram),
+        Dedup.shingleTokens(evalSet, idCol, textCol, ngram)),
+        Seq("token"), idCol, CandidatePairs.Eval)
+      .filter(col("shared") >= minShared)
+      .groupBy(col("d1").as(idCol)).agg(
+        max("shared").as("max_shared"),
         count(lit(1)).as("n_eval_hits"))
-  }
 
   /** Sequence packing: assign documents to fixed-token-budget packs,
     * contiguously in id order within each partition column value (language,

@@ -41,8 +41,13 @@ class DecontamSpec extends AnyFunSuite {
         } else rnd.nextLong()
       (10000L + j) -> s
     }
-    for (h <- Seq(0, 2, 4)) {
-      assert(run(corpus, evalSet, h) == brute(corpus, evalSet, h), s"maxHamming=$h")
+    // eval rows 0-2 bits from other eval rows: eval–eval pairs exist and
+    // must never count as hits
+    val evalTwins = evalSet.take(20).map { case (j, s) =>
+      (j + 100L) -> (0 until (j % 3).toInt).foldLeft(s)((a, k) => a ^ (1L << ((j * 3 + k) % 64)))
+    }
+    for (ev <- Seq(evalSet, evalSet ++ evalTwins); h <- Seq(0, 2, 4)) {
+      assert(run(corpus, ev, h) == brute(corpus, ev, h), s"maxHamming=$h, ${ev.size} eval rows")
     }
   }
 

@@ -83,25 +83,27 @@ class ImageCurationSpec extends AnyFunSuite {
     assert(n == "caption_missing")
   }
 
-  test("curateCaptionedImages: caption gates fire before image gates; kept+audit partition the input") {
+  test("pairReasons: caption gates fire before image gates; kept+audit partition the input") {
+    import org.apache.spark.sql.functions.lit
     val noise = img(64, 48)((x, y) =>
       gray((graft.sources.SiteGraph.mix(7L, x.toLong, y.toLong) >>> 40).toInt & 0xff))
     val rows = Seq(
       (1L, noise, "a red bicycle leaning on a wall"),      // passes both
       (2L, noise, "x"),                                    // caption_too_short
-      (3L, Array[Byte](1, 2), "a perfectly fine caption"), // undecodable
-      (4L, Array[Byte](1, 2), ""),                         // caption gate wins: never decoded
+      (3L, Array[Byte](1, 2), "a perfectly fine caption"), // unknown_container
+      (4L, Array[Byte](1, 2), ""),                         // caption gate wins
       (5L, img(8, 8)((x, y) => gray((x * 31 + y) % 256)),
         "a small but well captioned image"))               // too_small
-    val df = rows.toDF("image_id", "bytes", "caption")
-    val (kept, audit) = Multimodal.curateCaptionedImages(
-      df, "image_id", "bytes", "caption", minW = 32, minH = 32)
-    assert(kept.select("image_id").as[Long].collect().toSeq == Seq(1L))
-    val reasons = audit.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(reasons == Map(2L -> "caption_too_short", 3L -> "undecodable",
+    val df = rows.toDF("image_id", "bytes", "caption").withColumn("fmt", lit("png"))
+    val reasons = Multimodal.pairReasons(df, minW = 32, minH = 32)
+      .select("image_id", "reason").collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    // every input row is either kept (null reason) or audited with one reason
+    assert(reasons.keySet == rows.map(_._1).toSet)
+    assert(reasons.collect { case (id, None) => id }.toSet == Set(1L))
+    assert(reasons.collect { case (id, Some(r)) => id -> r } == Map(
+      2L -> "caption_too_short", 3L -> "unknown_container",
       4L -> "caption_missing", 5L -> "too_small"))
-    // audit id column keeps the input id type (long), so the anti-join is typed
-    assert(audit.schema("image_id").dataType.typeName == "long")
   }
 
   test("aspectBatches: integer banding, per-band chunking, dropIncomplete, sharded assignment total") {

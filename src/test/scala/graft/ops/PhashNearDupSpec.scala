@@ -117,13 +117,9 @@ class PhashNearDupSpec extends AnyFunSuite {
     val inc = Multimodal.verifiedPhashDupIncremental(corpus, delta,
         "doc_id", "bytes", maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // candidates checkpointed, bytes attach pruned by semi-join: still
+    // pair-for-pair the batch answer
     assert(inc == expected, s"inc=$inc expected=$expected")
-    // the per-trigger shape (candidates checkpointed, bytes attach pruned
-    // by semi-join) must be pair-for-pair the lazy plan's answer
-    val incMat = Multimodal.verifiedPhashDupIncremental(corpus, delta,
-        "doc_id", "bytes", maxHamming = 8, materializeCandidates = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(incMat == expected, s"incMat=$incMat expected=$expected")
     // the corpus×delta duplicate chain is present (not a vacuous equality)
     assert(expected.exists(p => p._1 <= 1 && p._2 == 10L))
     assert(expected.exists(p => p._1 == 6L && p._2 == 7L)) // intra-delta

@@ -141,4 +141,15 @@ class SimilaritySpec extends AnyFunSuite {
     // C(400, 2) × 8 candidate rows more than the valid corpus's own
     assert(run(valid.union(junk)) == ((validPairs, validRows)))
   }
+
+  test("zero-norm vectors never pair: the cosine verify never sees 0/0") {
+    // two all-zero vectors sign 0 in every band, so they share each band
+    // bucket; their cosine is 0/0, which throws under ANSI mode
+    val e = Seq((1L, Seq(0.0, 0.0, 0.0, 0.0)), (2L, Seq(0.0, 0.0, 0.0, 0.0)),
+      (3L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("vec_id", "embedding")
+    assert(Similarity.lshBandedNearDupPairs(e, "vec_id", "embedding",
+      planes = 4, bands = 2, dims = 4, threshold = 0.5).collect().isEmpty)
+    assert(Similarity.nearDupPairs(e, "vec_id", "embedding", threshold = 0.5)
+      .collect().isEmpty)
+  }
 }
