@@ -26,9 +26,7 @@ object Bench {
     * driver-size signal trustworthy. */
   def crawlBench(spark: SparkSession, nHosts: Int, pagesPerHost: Int,
       budget: Int, maxRounds: Int, cachePages: Boolean = true,
-      bloomExpected: Long = 2L * 1000 * 1000,
-      bloomBuckets: Int = 0, warmRounds: Int = 0,
-      seenKind: String = "bloom",
+      bloomExpected: Long = 2L * 1000 * 1000, warmRounds: Int = 0,
       // config hook for measuring optional features (trap guard, mirror
       // suppression, error backoff) on the same workload
       tweak: CrawlConfig => CrawlConfig = identity): (Double, Long, Seq[Map[String, Long]]) = {
@@ -55,8 +53,7 @@ object Bench {
       java.nio.file.Paths.get("/dev/shm"), "graft-bench-").toString
     val cfg = tweak(CrawlConfig(fifoParity = false, sameDomainOnly = false,
       perHostBudget = budget, saltBuckets = 16, bloomEnabled = true,
-      bloomExpectedItems = bloomExpected, bloomBuckets = bloomBuckets,
-      seenFilterKind = seenKind, maxRounds = maxRounds,
+      bloomExpectedItems = bloomExpected, maxRounds = maxRounds,
       compactEvery = 1000000, checkpointDir = Some(ckpt), // no compaction inside the timed window
       closureBuckets = 32)) // big join side never shuffles
     val warmWork =

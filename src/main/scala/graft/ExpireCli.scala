@@ -90,8 +90,7 @@ object ExpireCli {
       recency = recency.map(spark.read.parquet(_)))
     println(s"expired rounds ${expire.mkString(",")} " +
       s"(${m.visitedRounds.size - m2.visitedRounds.size} of ${m.visitedRounds.size}); " +
-      (if (m2.bloomRound >= 0) s"seen-filter snapshot updated in place (${m2.seenKind})"
-       else "seen-filter pointer dropped (rebuild on next crawl round)") +
+      "seen-filter pointer dropped (rebuild on next crawl round)" +
       (if (requeue) s"; requeued as segment ${m2.liveSegs.last.seg}" else ""))
     expire
   }

@@ -48,6 +48,9 @@ final case class CrawlConfig(
     perHostBudget: Int = 10,
     saltBuckets: Int = 16,
     bloomEnabled: Boolean = true,
+    // design load of the URL-seen filter; it also fixes the filter's
+    // partitioning into urlHash buckets (BloomBucketStore.sizing: one
+    // bucket per 2^20 expected URLs, SCALE.md §2.1)
     bloomExpectedItems: Long = 4L * 1000 * 1000,
     bloomFpp: Double = 0.01,
     bloomUpdateEvery: Int = 4,
@@ -55,16 +58,6 @@ final case class CrawlConfig(
     // metadata) the Bloom prefilter is skipped for the round — the plain
     // anti-join is cheaper than the probe/union machinery at small scale
     bloomMinFrontierRows: Long = 1L << 16,
-    // > 0: the seen-filter is partitioned into this many urlHash buckets,
-    // built distributively and loaded per task (SCALE.md §2.1 — at 10^10 the
-    // filter is GBs and cannot be one broadcast blob); 0 = single broadcast
-    bloomBuckets: Int = 0,
-    // seen-filter representation for the partitioned store (north rule:
-    // "Bloom/cuckoo-filter URL-seen set"): "bloom" (default) or "cuckoo"
-    // (16-bit-fingerprint cuckoo filter — ~10x lower FPP at similar space,
-    // supports delete for re-crawl/TTL; requires bloomBuckets > 0, the
-    // single-broadcast path stays Bloom-only)
-    seenFilterKind: String = "bloom",
     // bucket the redirect-resolved pages closure by url (0 = off): the big
     // side of the per-round fetch join then never shuffles
     closureBuckets: Int = 0,

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.BloomBucketStore
+import graft.functions.BloomBucketStore.Sizing
 import graft.io.StateFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
@@ -27,13 +29,16 @@ import scala.jdk.CollectionConverters._
   *    [minIdx,maxIdx] range prune fully-consumed files without reading them
   *  - `sides/round=K/`     error/redirect side-output delta (tagged `kind`)
   *  - `visitlog/round=K/`  (round, batchIdx, url) crawl-ordering lineage
-  *  - `bloom/round=K.bin`  serialized URL-seen Bloom filter snapshot
+  *  - `bloombuckets/round=K/bucket=B.bin`  the URL-seen filter snapshot,
+  *    one Bloom filter per urlHash bucket ([[graft.functions.BloomBucketStore]])
   *  - `hoststate/round=K/` parquet (host, notBefore) Retry-After backoff
   *    relation — a relation, not a driver map, so millions of backing-off
   *    hosts neither blow up driver memory nor inline into the plan
   *  - `manifest/round=K.properties` atomic commit record (written last;
   *    resume reads the highest round with a manifest — partially written
-  *    rounds are invisible)
+  *    rounds are invisible). It carries the layout version
+  *    ([[CheckpointStore.Layout]]); a manifest of another layout is refused
+  *    on load, never migrated.
   */
 /** Routes a pre-computed bucket id to that partition (key IS the partition). */
 private[operators] final class IdentityPartitioner(n: Int) extends org.apache.spark.Partitioner {
@@ -54,6 +59,10 @@ object CheckpointStore {
     * `expireAndRequeue`'s `recency` parameter. */
   val RecencyBand: Long = 1L << 34
 
+  /** Version of the on-disk layout above. Bump it whenever a file or a
+    * manifest property changes meaning; readers refuse every other value. */
+  val Layout: Int = 2
+
   final case class SegInfo(seg: Int, minIdx: Long, maxIdx: Long, rows: Long)
 
   final case class Manifest(
@@ -66,30 +75,16 @@ object CheckpointStore {
       fetchedTotal: Long,
       visitedRounds: Seq[Int],
       liveSegs: Seq[SegInfo],
-      hasBloom: Boolean,
+      // round of the current seen-filter snapshot; -1 = none (never built,
+      // or dropped by expiry — the next crawl round rebuilds it)
       bloomRound: Int = -1,
       // round whose hoststate/ dir holds the current backoff relation
       hostStateRound: Int = -1,
-      // which seen-filter representation the bloomRound snapshot was written
-      // with ("bloom" | "bloom-buckets" | "cuckoo-buckets") — resuming under
-      // a different kind must not trust the pointer (the other kind's bucket
-      // files don't exist, and a missing bucket reads as "never visited")
-      seenKind: String = "bloom",
-      // bucket count the snapshot was written with (0 = single-broadcast or
-      // legacy manifest). Key→bucket routing is floorMod(urlHash, n): probing
-      // or deleting under a DIFFERENT n reads the wrong files, which turns
-      // into false negatives — a resume or expiry must match this count or
-      // distrust the snapshot and rebuild.
-      seenBuckets: Int = 0,
-      // run token of the last COMMITTED cuckoo expiry. Pre-delete copies are
-      // named `bucket=B.bin.pre-<token>`; a resume or a new expiry rolls
-      // back only copies whose token does NOT match this (an uncommitted
-      // run), and sweeps the ones that do — without it, a crash in the
-      // window between the expiry's manifest commit and its copy sweep
-      // would roll a COMMITTED delete back, resurrecting expired keys into
-      // the seen filter forever (their visited rounds are already gone from
-      // the manifest, so nothing would ever delete them again).
-      expiryToken: String = "",
+      // bucket layout and per-bucket Bloom parameters of the snapshot.
+      // Key→bucket routing is floorMod(urlHash, buckets) and Bloom bit
+      // arrays merge only at equal size, so a resume whose derived sizing
+      // differs must rebuild the snapshot, never probe or merge it.
+      seen: Sizing = Sizing(0, 0L, 0.0),
       // round whose patstate/ dir holds the current (patternHash, admitted
       // count) relation of the crawl-trap guard (CrawlConfig.trapPatternCap);
       // -1 = guard never ran. Counts are LIFETIME admissions per pattern, so
@@ -157,6 +152,7 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
 
   def saveManifest(m: Manifest): Unit = {
     val props = new Properties()
+    props.setProperty("layout", Layout.toString)
     props.setProperty("round", m.round.toString)
     props.setProperty("nextIdx", m.nextIdx.toString)
     props.setProperty("watermark", m.watermark.toString)
@@ -167,12 +163,11 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     props.setProperty("visitedRounds", m.visitedRounds.mkString(","))
     props.setProperty("liveSegs",
       m.liveSegs.map(s => s"${s.seg}:${s.minIdx}:${s.maxIdx}:${s.rows}").mkString(","))
-    props.setProperty("hasBloom", m.hasBloom.toString)
     props.setProperty("bloomRound", m.bloomRound.toString)
     props.setProperty("hostStateRound", m.hostStateRound.toString)
-    props.setProperty("seenKind", m.seenKind)
-    props.setProperty("seenBuckets", m.seenBuckets.toString)
-    props.setProperty("expiryToken", m.expiryToken)
+    props.setProperty("seenBuckets", m.seen.buckets.toString)
+    props.setProperty("seenBucketItems", m.seen.itemsPerBucket.toString)
+    props.setProperty("seenFpp", m.seen.fpp.toString)
     props.setProperty("patternStateRound", m.patternStateRound.toString)
     props.setProperty("contentRounds", m.contentRounds.mkString(","))
     props.setProperty("latencyStateRound", m.latencyStateRound.toString)
@@ -188,37 +183,24 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     if (rounds.isEmpty) None else Some(loadManifest(rounds.max))
   }
 
+  /** Reads one manifest. A manifest of another layout (or of the
+    * unversioned layout before it) throws before anything is written. */
   def loadManifest(round: Int): Manifest = {
+    val path = p("manifest", s"round=$round.properties")
     val props = new Properties()
-    val in = sfs.open(p("manifest", s"round=$round.properties"))
+    val in = sfs.open(path)
     try props.load(in) finally in.close()
+    val layout = props.getProperty("layout")
+    if (layout != Layout.toString)
+      throw new IllegalStateException(
+        s"checkpoint manifest $path has layout " +
+          Option(layout).getOrElse("1 (no layout property)") +
+          s"; this build reads layout $Layout only. Checkpoints are not " +
+          "migrated: crawl into a new checkpoint directory.")
     def seq(key: String): Seq[String] = {
       val v = props.getProperty(key, "")
       if (v.isEmpty) Nil else v.split(",").toSeq
     }
-    val bloomRound = props.getProperty("bloomRound", "-1").toInt
-    // legacy manifests (pre-seenKind) recorded neither the representation
-    // nor the bucket count: infer BOTH from the snapshot dir that actually
-    // exists — LAZILY, so modern manifests (which always carry the
-    // properties) never pay the exists+list round trips (a LIST call per
-    // manifest load on an object store). The count must come from the
-    // files, never from the resuming config — probes route urlHash by
-    // floorMod(h, count), so trusting a changed cfg.bloomBuckets would
-    // read the wrong (or missing) bucket per key and false-negative
-    // visited URLs back into the frontier. Count = max bucket index + 1,
-    // NOT the file count: buckets that never received a key have no file
-    // ("missing bucket = empty" is the store's layout contract).
-    lazy val legacyBucketDir =
-      if (bloomRound >= 0) Some(p("bloombuckets", s"round=$bloomRound")) else None
-    lazy val seenKindDefault =
-      if (legacyBucketDir.exists(sfs.exists)) "bloom-buckets" else "bloom"
-    def seenBucketsDefault: Int =
-      if (seenKindDefault == "bloom-buckets")
-        legacyBucketDir.map(d => sfs.listNames(d)
-          .collect { case n if n.startsWith("bucket=") && n.endsWith(".bin") =>
-            n.stripPrefix("bucket=").stripSuffix(".bin").toInt }
-          .foldLeft(-1)(math.max) + 1).getOrElse(0)
-      else 0
     Manifest(
       props.getProperty("round").toInt,
       props.getProperty("nextIdx").toLong,
@@ -232,18 +214,14 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
         val Array(a, b, c, d) = s.split(":")
         SegInfo(a.toInt, b.toLong, c.toLong, d.toLong)
       },
-      props.getProperty("hasBloom").toBoolean,
-      bloomRound,
-      props.getProperty("hostStateRound", "-1").toInt,
-      // Option + getOrElse (by-name), NOT getProperty's eager default arg:
-      // the inference must only run when the property is absent
-      Option(props.getProperty("seenKind")).getOrElse(seenKindDefault),
-      Option(props.getProperty("seenBuckets")).map(_.toInt)
-        .getOrElse(seenBucketsDefault),
-      props.getProperty("expiryToken", ""),
-      props.getProperty("patternStateRound", "-1").toInt,
+      props.getProperty("bloomRound").toInt,
+      props.getProperty("hostStateRound").toInt,
+      Sizing(props.getProperty("seenBuckets").toInt,
+        props.getProperty("seenBucketItems").toLong,
+        props.getProperty("seenFpp").toDouble),
+      props.getProperty("patternStateRound").toInt,
       seq("contentRounds").map(_.toInt),
-      props.getProperty("latencyStateRound", "-1").toInt)
+      props.getProperty("latencyStateRound").toInt)
   }
 
   /** The visited set: union of disjoint per-round deltas (no distinct).
@@ -285,93 +263,40 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     else Some(spark.read.schema(visitLogSchema).parquet(existing: _*))
   }
 
-  def saveBloom(round: Int, bloom: BloomFilter): Unit =
-    sfs.writeAtomic(p("bloom", s"round=$round.bin")) { out =>
-      val b = new BufferedOutputStream(out)
-      bloom.writeTo(b); b.flush()
-    }
-
-  def loadBloom(round: Int): BloomFilter = {
-    val in = new BufferedInputStream(sfs.open(p("bloom", s"round=$round.bin")))
-    try BloomFilter.readFrom(in) finally in.close()
-  }
-
-  /** Distributed build of the partitioned seen-filter snapshot (SCALE.md
-    * §2.1): `deltas` (urlHash column) is identity-partitioned into `nBuckets`
-    * by `pmod(urlHash, nBuckets)`; each task builds its bucket's delta
-    * filter, merges the previous snapshot's bucket file (same create()
-    * parameters each round, so bit layouts are merge-compatible), and
+  /** Distributed build of the seen-filter snapshot (SCALE.md §2.1):
+    * `deltas.urlHash` is identity-partitioned into `sizing.buckets` by
+    * `floorMod(urlHash, buckets)`; each task builds its bucket's delta
+    * filter, merges the previous snapshot's bucket file (same sizing, so
+    * the bit layouts are merge-compatible — the caller guarantees it), and
     * publishes `bloombuckets/round=K/bucket=B.bin` through StateFs's
     * attempt-unique atomic write — task retries / speculative attempts of
     * one bucket never interleave on a shared tmp file, and both attempts
-    * write identical content so either rename winning is correct. The driver
-    * never holds a filter — per-round driver cost is O(#buckets) task
-    * scheduling, not O(rows).
+    * write identical content, so either rename winning is correct. The
+    * driver never holds a filter — per-round driver cost is O(#buckets)
+    * task scheduling, not O(rows).
     */
   def saveBloomBuckets(round: Int, prevRound: Int, deltas: DataFrame,
-      nBuckets: Int, expectedPerBucket: Long, fpp: Double): Unit =
-    saveSeenBuckets[BloomFilter](round, prevRound, deltas, nBuckets,
-      () => BloomFilter.create(expectedPerBucket, fpp),
-      (f, h) => f.putLong(h),
-      (f, prev) => { f.mergeInPlace(prev); () },
-      in => BloomFilter.readFrom(in),
-      (f, out) => f.writeTo(out),
-      graft.functions.BloomBucketStore.path)
-
-  /** Distributed build of the partitioned CUCKOO seen-filter snapshot — the
-    * `seenFilterKind = "cuckoo"` twin of [[saveBloomBuckets]]. Same layout
-    * contract (`cuckoobuckets/round=K/bucket=B.bin`, missing bucket = empty);
-    * the previous round's bucket is folded in via entry re-insertion
-    * (cuckoo entries are relocatable (bucket, fingerprint) pairs, see
-    * [[graft.functions.CuckooFilter.mergeInPlace]]). Overload pressure
-    * degrades a bucket to `saturated` (probe-all-true) — correct, never a
-    * false negative. Attempt-unique atomic publishes as in the Bloom build;
-    * two attempts of one bucket may differ in byte layout (insertion order)
-    * but represent the same key set, so either rename winning is correct.
-    */
-  def saveCuckooBuckets(round: Int, prevRound: Int, deltas: DataFrame,
-      nBuckets: Int, expectedPerBucket: Long): Unit =
-    saveSeenBuckets[graft.functions.CuckooFilter](round, prevRound, deltas, nBuckets,
-      () => graft.functions.CuckooFilter.create(expectedPerBucket),
-      (f, h) => f.putLong(h),
-      (f, prev) => { f.mergeInPlace(prev); () },
-      in => graft.functions.CuckooFilter.readFrom(in),
-      (f, out) => f.writeTo(out),
-      graft.functions.CuckooBucketStore.path)
-
-  /** The shared build pipeline of both partitioned snapshot stores:
-    * `deltas.urlHash` identity-partitioned into `nBuckets` by
-    * `floorMod(urlHash, nBuckets)`; each task builds its bucket's delta
-    * filter, folds in the previous snapshot's bucket file, and publishes
-    * `<layout>/round=K/bucket=B.bin` through StateFs's attempt-unique
-    * atomic write — task retries / speculative attempts of one bucket never
-    * interleave on a shared tmp file, and both attempts represent the same
-    * key set (Bloom attempts are byte-identical; cuckoo layouts may differ
-    * with insertion order), so either rename winning is correct. */
-  private def saveSeenBuckets[F](round: Int, prevRound: Int, deltas: DataFrame,
-      nBuckets: Int, create: () => F, put: (F, Long) => Unit,
-      merge: (F, F) => Unit, readFrom: java.io.InputStream => F,
-      writeTo: (F, java.io.OutputStream) => Unit,
-      path: (String, Int, Int) => String): Unit = {
+      sizing: Sizing): Unit = {
     val dirStr = dir
     val fsRef = sfs // serializable; do not capture `this` in the task closure
+    val Sizing(nBuckets, perBucket, fpp) = sizing
     deltas.select("urlHash").rdd
       .map(r => (Math.floorMod(r.getLong(0), nBuckets.toLong).toInt, r.getLong(0)))
       .partitionBy(new IdentityPartitioner(nBuckets))
       .mapPartitionsWithIndex { (bucket, it) =>
-        val f = create()
+        val f = BloomFilter.create(perBucket, fpp)
         var n = 0L
-        it.foreach { kv => put(f, kv._2); n += 1 }
-        val prevPath = path(dirStr, prevRound, bucket)
+        it.foreach { kv => f.putLong(kv._2); n += 1 }
+        val prevPath = BloomBucketStore.path(dirStr, prevRound, bucket)
         val hasPrev = prevRound >= 0 && fsRef.exists(prevPath)
         if (hasPrev) {
           val in = new BufferedInputStream(fsRef.open(prevPath))
-          try merge(f, readFrom(in)) finally in.close()
+          try f.mergeInPlace(BloomFilter.readFrom(in)) finally in.close()
         }
         if (n > 0 || hasPrev) {
-          fsRef.writeAtomic(path(dirStr, round, bucket)) { out =>
+          fsRef.writeAtomic(BloomBucketStore.path(dirStr, round, bucket)) { out =>
             val b = new BufferedOutputStream(out)
-            writeTo(f, b); b.flush()
+            f.writeTo(b); b.flush()
           }
         }
         Iterator.single(n)
@@ -379,30 +304,16 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
   }
 
   /** TTL / re-crawl expiry: retire whole visited ROUNDS from the seen set
-    * and (by default) re-queue their URLs for a fresh fetch — the operation
-    * the cuckoo seen-filter representation exists for. Offline op: run it
-    * between crawl sessions on the same checkpoint dir, then resume with a
-    * higher `maxRounds`; the resumed crawl re-fetches exactly the expired
-    * URLs (they are gone from the visited relation AND from the filter, and
-    * live again in the frontier).
+    * and (by default) re-queue their URLs for a fresh fetch. Offline op:
+    * run it between crawl sessions on the same checkpoint dir, then resume
+    * with a higher `maxRounds`; the resumed crawl re-fetches exactly the
+    * expired URLs (they are gone from the visited relation and live again
+    * in the frontier).
     *
-    * Seen-filter handling is where the two representations diverge:
-    *   - `cuckoo-buckets`: the expired keys are DELETED from the snapshot in
-    *     place (per-bucket read → delete → atomic replace; cost ∝ expired
-    *     keys). Safe because every expired key in a folded round was
-    *     inserted, and cuckoo tables hold duplicate fingerprints as separate
-    *     copies — deleting one copy never erases another key's membership.
-    *     A task/executor that cached the pre-delete bucket serves false
-    *     POSITIVES only (routed through the visited anti-join, where the
-    *     expired rows no longer exist) — never a false negative; the
-    *     driver-side cache is invalidated eagerly, remote caches roll over
-    *     at the next snapshot round.
-    *   - `bloom` / `bloom-buckets`: a Bloom filter cannot delete. The
-    *     snapshot pointer is dropped and the next crawl round rebuilds the
-    *     filter from ALL remaining visited deltas (cost ∝ the whole
-    *     remaining seen set — the asymmetry is the point of offering the
-    *     cuckoo store). Until that rebuild the crawl runs the plain
-    *     anti-join: exact, merely unprefiltered.
+    * A Bloom filter cannot delete, so the seen-filter snapshot pointer is
+    * dropped and the next crawl round rebuilds the filter from the
+    * remaining visited deltas. Until that rebuild the crawl runs the plain
+    * anti-join: exact, merely unprefiltered.
     *
     * Requeued rows land in a fresh frontier segment under a synthetic round
     * (`m.round + 1`, so the segment number and polite-mode discoveryIdx
@@ -420,8 +331,8 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     *
     * Construct this store with `visitedFromLog` matching the crawl that
     * wrote the checkpoint (`!cfg.fifoParity`) — the visited-delta layout
-    * differs between the two modes and the delete pass must read the
-    * deduplicated per-round key set.
+    * differs between the two modes and the requeue reads the expired
+    * rounds' deltas.
     *
     * `requeue = false` removes the rounds from the seen set without
     * queueing an explicit re-fetch segment — but it does NOT guarantee the
@@ -429,7 +340,7 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     * still be live (the watermark never moves; only compaction removes
     * consumed rows), and once no longer filtered by the visited anti-join
     * they re-schedule anyway. Use the default for deterministic re-crawl
-    * semantics; `requeue = false` only for measuring the filter update.
+    * semantics; `requeue = false` only to retire rounds from the seen set.
     *
     * `recency` — optional `(url, lastmod:timestamp)` relation (e.g.
     * [[graft.sources.Sitemaps]]'s `recencyRelation` over sitemap
@@ -454,26 +365,6 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     val expireSet = rounds.toSet
     require(rounds.nonEmpty && expireSet.subsetOf(m.visitedRounds.toSet),
       s"expire rounds $rounds must be visited rounds ${m.visitedRounds}")
-
-    // cuckoo snapshots support delete; anything else must drop the pointer.
-    // The bucket count comes from the manifest, never a caller: deleting
-    // under a different floorMod routing would remove kept keys' colliding
-    // fingerprints from the wrong files (false negatives).
-    val canDelete =
-      m.seenKind == "cuckoo-buckets" && m.seenBuckets > 0 && m.bloomRound >= 0
-    val folded = rounds.filter(_ <= m.bloomRound)
-    // fresh run token: this run's pre-delete copies carry it, and only the
-    // manifest commit below promotes it to "committed" — see Manifest.expiryToken
-    val runToken = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    if (canDelete && folded.nonEmpty) {
-      // roll back any UNCOMMITTED prior expiry first (and sweep leftovers of
-      // the COMMITTED one, identified by m.expiryToken) — this run's copies
-      // are then the only ones in the dir, so the post-commit sweep is safe
-      restoreCuckooPreCopies(m.bloomRound, m.expiryToken)
-      deleteCuckooKeys(m.bloomRound, readVisited(folded).get, m.seenBuckets, runToken)
-      graft.functions.CuckooBucketStore.invalidate(dir)
-    }
-    val keepSnapshot = canDelete || m.bloomRound < 0
 
     val (newRound, newNextIdx, newSegs) =
       if (!requeue) (m.round, m.nextIdx, m.liveSegs)
@@ -556,145 +447,9 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
 
     val m2 = m.copy(round = newRound, nextIdx = newNextIdx,
       visitedRounds = m.visitedRounds.filterNot(expireSet),
-      liveSegs = newSegs,
-      hasBloom = m.hasBloom && keepSnapshot,
-      bloomRound = if (keepSnapshot) m.bloomRound else -1,
-      // committing the manifest is what flips this run's deletes from
-      // "roll back on sight" to "committed — sweep, never restore"
-      expiryToken =
-        if (canDelete && folded.nonEmpty) runToken else m.expiryToken)
+      liveSegs = newSegs, bloomRound = -1)
     saveManifest(m2)
-    // only now is the expiry durable — sweep the pre-delete copies that a
-    // rerun would otherwise (correctly) restart from
-    if (canDelete && folded.nonEmpty) cleanupCuckooPreCopies(m.bloomRound)
     m2
-  }
-
-  /** Distributed delete of `keys` from the round-`snapRound` cuckoo
-    * snapshot, one task per touched bucket — in TWO passes over an
-    * immutable copy so it is idempotent under task retry, speculation, AND
-    * a crashed-and-rerun expiry:
-    *
-    *  1. copy pass: each touched bucket's CURRENT file is copied aside to
-    *     `bucket=B.bin.pre-<runToken>` unless that copy already exists (an
-    *     earlier attempt of the same pass — the token is fixed per expiry
-    *     run, so retries share it). The caller rolls back any INTERRUPTED
-    *     prior expiry via [[restoreCuckooPreCopies]] before this runs, so
-    *     no stale copy can exist; within the pass the source is
-    *     unmodified, so concurrent attempts copy identical bytes.
-    *  2. delete pass: every attempt reads the `.pre` copy — never the
-    *     possibly-already-published target — deletes the keys, and
-    *     publishes via attempt-unique atomic replace. All attempts compute
-    *     the same post-delete key SET from the same input, so a repeated
-    *     delete can never strip a kept key's colliding (bucket,
-    *     fingerprint) entry (the false-negative hazard of re-deleting from
-    *     an already-updated file).
-    *
-    * The `.pre` copies are swept by the caller only AFTER the expiry
-    * manifest commits; until then a rerun — or a plain crawl resume —
-    * first ROLLS BACK to the originals via [[restoreCuckooPreCopies]].
-    * Copy cost ∝ touched buckets ∝ expired keys — the economy that makes
-    * cuckoo expiry cheaper than a Bloom rebuild is preserved. */
-  private def deleteCuckooKeys(snapRound: Int, keys: DataFrame, nBuckets: Int,
-      runToken: String): Unit = {
-    val dirStr = dir
-    val fsRef = sfs // serializable; do not capture `this` in the task closure
-    val preSuffix = s".pre-$runToken"
-    val bucketed = keys.select("urlHash").rdd
-      .map(r => (Math.floorMod(r.getLong(0), nBuckets.toLong).toInt, r.getLong(0)))
-      .partitionBy(new IdentityPartitioner(nBuckets))
-    bucketed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // pass 1 (job barrier before pass 2): immutable copies aside
-      bucketed.mapPartitionsWithIndex { (bucket, it) =>
-        if (it.hasNext) {
-          val pp = graft.functions.CuckooBucketStore.path(dirStr, snapRound, bucket)
-          val pre = pp + preSuffix
-          if (fsRef.exists(pp) && !fsRef.exists(pre))
-            fsRef.writeAtomic(pre) { out =>
-              val in = new BufferedInputStream(fsRef.open(pp))
-              try in.transferTo(out) finally in.close()
-            }
-        }
-        Iterator.single(0L)
-      }.count()
-      // pass 2: read the copy, delete, publish
-      bucketed.mapPartitionsWithIndex { (bucket, it) =>
-        if (!it.hasNext) Iterator.single(0L)
-        else {
-          val pp = graft.functions.CuckooBucketStore.path(dirStr, snapRound, bucket)
-          val pre = pp + preSuffix
-          if (!fsRef.exists(pre)) Iterator.single(0L)
-          else {
-            val in = new BufferedInputStream(fsRef.open(pre))
-            val f = try graft.functions.CuckooFilter.readFrom(in) finally in.close()
-            var nDel = 0L
-            it.foreach { kv => if (f.delete(kv._2)) nDel += 1 }
-            if (nDel > 0) fsRef.writeAtomic(pp) { out =>
-              val b = new BufferedOutputStream(out)
-              f.writeTo(b); b.flush()
-            }
-            Iterator.single(nDel)
-          }
-        }
-      }.count()
-    } finally bucketed.unpersist(blocking = false)
-  }
-
-  /** The snapshot round dir, derived from the SAME path builder the delete
-    * pass writes through — copy, restore, and sweep can never diverge from
-    * the bucket layout. */
-  private def cuckooRoundDir(snapRound: Int): String = {
-    val p0 = graft.functions.CuckooBucketStore.path(dir, snapRound, 0)
-    p0.substring(0, p0.lastIndexOf('/'))
-  }
-
-  /** Roll back an INTERRUPTED expiry: a leftover `bucket=B.bin.pre-<token>`
-    * whose token does NOT match the manifest's committed `expiryToken` is
-    * the pre-delete original of a run whose manifest never committed, so
-    * the original is restored over the (possibly partially-deleted) live
-    * file and the copy removed. A copy whose token DOES match belongs to
-    * the committed run (crash between its manifest commit and its sweep) —
-    * restoring it would resurrect committed deletes forever, so it is
-    * swept instead. Legacy bare `.pre` copies (pre-token protocol) are
-    * always restored. Must run before a new expiry starts (so a committed
-    * run can safely sweep ALL copies afterwards) and on crawl resume (so a
-    * crawl never merges a wrecked bucket into future snapshots).
-    * Idempotent; no-op when no copies exist. */
-  private[operators] def restoreCuckooPreCopies(snapRound: Int,
-      committedToken: String): Unit = {
-    val roundDir = cuckooRoundDir(snapRound)
-    if (sfs.exists(roundDir)) {
-      val pres = sfs.listNames(roundDir).filter(_.contains(".bin.pre"))
-      var restored = false
-      pres.foreach { n =>
-        val pre = sfs.child(roundDir, n)
-        val committed = committedToken.nonEmpty &&
-          n.endsWith(s".pre-$committedToken")
-        if (committed) sfs.delete(pre) // late sweep of a committed run
-        else {
-          val target = n.substring(0, n.lastIndexOf(".pre"))
-          sfs.writeAtomic(sfs.child(roundDir, target)) { out =>
-            val in = new BufferedInputStream(sfs.open(pre))
-            try in.transferTo(out) finally in.close()
-          }
-          sfs.delete(pre)
-          restored = true
-        }
-      }
-      if (restored) graft.functions.CuckooBucketStore.invalidate(dir)
-    }
-  }
-
-  /** Sweep the `.pre` copies left by [[deleteCuckooKeys]] — called only
-    * after the expiry manifest has committed, and only safe because
-    * [[restoreCuckooPreCopies]] ran before this expiry started (every
-    * remaining copy belongs to THIS committed run). */
-  private def cleanupCuckooPreCopies(snapRound: Int): Unit = {
-    val roundDir = cuckooRoundDir(snapRound)
-    if (sfs.exists(roundDir))
-      sfs.listNames(roundDir).filter(_.contains(".bin.pre"))
-        .foreach(n => sfs.delete(sfs.child(roundDir, n)))
   }
 
   /** Round-local fetch metrics (lineage + fetch metrics per north rule). */
@@ -754,19 +509,4 @@ final class CheckpointStore(spark: SparkSession, val dir: String,
     if (rounds.isEmpty) None
     else Some(spark.read.schema(contentSchema)
       .parquet(rounds.map(contentPath): _*))
-
-  /** Pre-round-3 checkpoints stored backoff as a `round=K.properties` file
-    * and no manifest pointer; read it (if present) so resume migrates the
-    * state instead of silently dropping every host's Retry-After window. */
-  def loadLegacyHostState(round: Int): Option[Map[String, Int]] = {
-    val path = p("hoststate", s"round=$round.properties")
-    if (!sfs.exists(path)) None
-    else {
-      val props = new Properties()
-      val in = sfs.open(path)
-      try props.load(in) finally in.close()
-      Some(props.stringPropertyNames().asScala
-        .map(k => k -> props.getProperty(k).toInt).toMap)
-    }
-  }
 }

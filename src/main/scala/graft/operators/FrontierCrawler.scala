@@ -6,7 +6,6 @@ import graft.url.{PyUrl, RedirectLoop, UrlNormalizer, UrlValidator}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Result of a crawl — URL relations stay distributed (Datasets), scalars in
   * [[graft.model.CrawlStats]]. Mirrors `CrawlResult`
@@ -367,59 +366,22 @@ final class FrontierCrawler(
           else store.readSegsRaw(Seq(0)).count()
         val nextIdx = if (cfg.fifoParity) sc else IdxSpan
         val mm = CheckpointStore.Manifest(-1, nextIdx, -1L, 0L, 0L, 0L, 0L, Nil,
-          Seq(CheckpointStore.SegInfo(0, 0L, nextIdx - 1, sc)), cfg.bloomEnabled, -1)
+          Seq(CheckpointStore.SegInfo(0, 0L, nextIdx - 1, sc)))
         if (sc > 0) store.saveManifest(mm) // commit round -1 (seed load)
         mm
     }
-    // bucket mode: the filter never exists as one driver/broadcast object —
-    // snapshots live per urlHash bucket on disk, probed lazily per task
-    val bucketMode = cfg.bloomEnabled && cfg.bloomBuckets > 0
-    require(Set("bloom", "cuckoo")(cfg.seenFilterKind),
-      s"seenFilterKind must be bloom|cuckoo: ${cfg.seenFilterKind}")
-    val cuckooMode = bucketMode && cfg.seenFilterKind == "cuckoo"
-    require(cfg.seenFilterKind == "bloom" || cfg.bloomBuckets > 0,
-      "seenFilterKind=cuckoo requires the partitioned store (bloomBuckets > 0); " +
-        "the single-broadcast path is Bloom-only")
-    // which snapshot representation THIS run writes — a resumed checkpoint
-    // whose snapshot was written under a different representation OR bucket
-    // count must not be trusted (another layout's files don't exist / key→
-    // bucket routing differs; a missing or wrong bucket file reads as
-    // "never visited", which would be a false negative)
-    val curSeenKind =
-      if (!cfg.bloomEnabled) "none"
-      else if (cuckooMode) "cuckoo-buckets"
-      else if (bucketMode) "bloom-buckets"
-      else "bloom"
-    val curSeenBuckets = if (bucketMode) cfg.bloomBuckets else 0
-    val snapshotCompatible = m.round < 0 || (m.seenKind == curSeenKind &&
-      // seenBuckets == 0 on pre-seenBuckets manifests: unknown, trust cfg
-      (m.seenBuckets == 0 || m.seenBuckets == curSeenBuckets))
-    // an expiry interrupted between its delete pass and its manifest commit
-    // leaves partially-deleted buckets plus their .pre originals — roll
-    // back BEFORE any probe, or the wrecked buckets would false-negative
-    // still-visited URLs and be merged into every future snapshot
-    if (m.round >= 0 && m.seenKind == "cuckoo-buckets" && m.bloomRound >= 0)
-      store.restoreCuckooPreCopies(m.bloomRound, m.expiryToken)
-    // seeded from the first round's distributed build — sizing must come
-    // from the same code path (stat.bloomFilter) or merges are incompatible
-    var bloom: Option[BloomFilter] =
-      if (!cfg.bloomEnabled || bucketMode || !snapshotCompatible) None
-      else if (m.round >= 0 && m.hasBloom && m.bloomRound >= 0) Some(store.loadBloom(m.bloomRound))
-      else None
-    var bloomRound: Int = if (snapshotCompatible) m.bloomRound else -1
+    // the seen filter lives per urlHash bucket on disk, probed lazily per
+    // task. A snapshot written under another sizing (bucket count or
+    // per-bucket Bloom parameters) is rebuilt, never probed or merged:
+    // another bucket count routes keys to the wrong files (false
+    // negatives), and Bloom bit arrays merge only at equal size
+    val sizing = graft.functions.BloomBucketStore.sizing(cfg.bloomExpectedItems, cfg.bloomFpp)
+    var bloomRound: Int = if (cfg.bloomEnabled && m.seen == sizing) m.bloomRound else -1
     loadHostBackoff(if (m.round >= 0) m.hostStateRound else -1)
     // crawl-trap guard state pointer (lifetime per-pattern admission counts)
     var patternStateRound: Int = if (m.round >= 0) m.patternStateRound else -1
     // latency-adaptive politeness pointer (smoothed per-host fetch latency)
     latencyStateRound = if (m.round >= 0) m.latencyStateRound else -1
-    // one-time migration: a checkpoint written before the relation-backed
-    // store has no hostStateRound pointer but may hold a legacy properties
-    // file — convert it rather than silently un-throttling every host
-    if (m.round >= 0 && m.hostStateRound < 0)
-      store.loadLegacyHostState(m.round).filter(_.nonEmpty).foreach { legacy =>
-        store.saveHostState(m.round, legacy.toSeq.toDF("host", "notBefore"))
-        loadHostBackoff(m.round)
-      }
 
     var round = m.round + 1
     var done = false
@@ -444,26 +406,15 @@ final class FrontierCrawler(
     // rounds ride the existing delta anti-join, exactly like a round
     // between bloomUpdateEvery cadences; the manifest keeps pointing at the
     // old snapshot, so a crash mid-build resumes correctly (the new
-    // snapshot's files are unreferenced orphans). The single-broadcast
-    // Bloom variant computes its delta filter in the future but merges it
-    // into the driver-resident filter only at adoption — `mergeInPlace` on
-    // an object a broadcast may be serializing would be a torn read.
+    // snapshot's files are unreferenced orphans).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    var pendingSnapshot: Option[(Int, Future[Option[BloomFilter]])] = None
+    var pendingSnapshot: Option[(Int, Future[Unit])] = None
     def adoptSnapshot(block: Boolean): Unit = pendingSnapshot match {
       case Some((r, fut)) if block || fut.isCompleted =>
         timed("t_bloom_adopt") {
-          Await.result(fut, Duration.Inf) match {
-            case Some(delta) => // single-broadcast mode: merge + persist now
-              bloom match {
-                case Some(b) => b.mergeInPlace(delta)
-                case None => bloom = Some(delta)
-              }
-              store.saveBloom(r, bloom.get)
-            case None => () // bucket modes persisted inside the build
-          }
+          Await.result(fut, Duration.Inf)
           bloomRound = r
           pendingSnapshot = None
         }
@@ -489,26 +440,19 @@ final class FrontierCrawler(
           // J1: anti-join frontier ∖ visited, Bloom-prefiltered — rows the
           // filter has definitely never seen skip the join entirely
           // (SURVEY.md §2.4 J1; the 10^10-scale path).
-          val bloomBc = bloom.map(b => spark.sparkContext.broadcast(b))
-          // native codegen'd probes — keep the eligibility filter fused
+          // native codegen'd probe — keeps the eligibility filter fused
           // (a UDF here would break WholeStageCodegen on the hot path)
           // tiny frontiers (exact size known from segment metadata) skip the
           // probe/union machinery — the plain anti-join is cheaper until the
           // frontier outgrows cfg.bloomMinFrontierRows
           val frontierRows = m.liveSegs.map(_.rows).sum
           val probe: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] =
-            if (frontierRows < cfg.bloomMinFrontierRows) None
-            else if (cuckooMode && bloomRound >= 0) {
+            if (frontierRows < cfg.bloomMinFrontierRows || bloomRound < 0) None
+            else {
               val handle =
-                new graft.functions.CuckooBucketHandle(ckptDir, bloomRound, cfg.bloomBuckets, sfs)
-              Some(h => graft.functions.CuckooFunctions.cuckoo_bucket_might_contain(h, handle))
-            } else if (bucketMode && bloomRound >= 0) {
-              val handle =
-                new graft.functions.BloomBucketHandle(ckptDir, bloomRound, cfg.bloomBuckets, sfs)
+                new graft.functions.BloomBucketHandle(ckptDir, bloomRound, sizing.buckets, sfs)
               Some(h => graft.functions.BloomFunctions.bloom_bucket_might_contain(h, handle))
-            } else bloomBc.map(bc =>
-              (h: org.apache.spark.sql.Column) =>
-                graft.functions.BloomFunctions.bloom_might_contain(h, bc))
+            }
           val eligible = (visitedOpt, probe) match {
             case (None, _) => frontier
             case (Some(v), None) => frontier.join(v.select("url"), Seq("url"), "left_anti")
@@ -812,14 +756,12 @@ final class FrontierCrawler(
             val retryCnt = sideMetrics("retry").asInstanceOf[Long]
 
             // Bloom seen-filter: merged lazily — absorbing every round would
-            // rebuild/broadcast a full-size filter per round (at 10^10 the
-            // filter itself is GBs and must live per-partition); instead the
-            // filter absorbs visited deltas every bloomUpdateEvery rounds and
-            // the uncovered tail is handled by a small delta anti-join at
-            // eligibility time. Snapshot persisted for exact resume.
+            // rewrite every bucket per round; instead the filter absorbs
+            // visited deltas every bloomUpdateEvery rounds and the uncovered
+            // tail is handled by a small delta anti-join at eligibility
+            // time. Snapshot persisted for exact resume.
             val bloomStale = pendingSnapshot.isEmpty &&
-              ((if (bucketMode) bloomRound < 0 else bloom.isEmpty) ||
-                round - bloomRound >= cfg.bloomUpdateEvery)
+              (bloomRound < 0 || round - bloomRound >= cfg.bloomUpdateEvery)
             if (cfg.bloomEnabled && bloomStale) timed("t_bloom_launch") {
               // plan resolution (schema/footer reads) happens HERE on the
               // main thread against durable inputs; the build's Spark jobs
@@ -830,18 +772,8 @@ final class FrontierCrawler(
               val prevRound = bloomRound
               pendingSnapshot = Some((launchRound, Future {
                 spark.sparkContext.setJobGroup("t_bloom", "t_bloom")
-                try {
-                  if (cuckooMode) {
-                    store.saveCuckooBuckets(launchRound, prevRound, deltas, cfg.bloomBuckets,
-                      math.max(cfg.bloomExpectedItems / cfg.bloomBuckets, 1024L))
-                    None
-                  } else if (bucketMode) {
-                    store.saveBloomBuckets(launchRound, prevRound, deltas, cfg.bloomBuckets,
-                      math.max(cfg.bloomExpectedItems / cfg.bloomBuckets, 1024L), cfg.bloomFpp)
-                    None
-                  } else Some(
-                    deltas.stat.bloomFilter("urlHash", cfg.bloomExpectedItems, cfg.bloomFpp))
-                } finally spark.sparkContext.clearJobGroup()
+                try store.saveBloomBuckets(launchRound, prevRound, deltas, sizing)
+                finally spark.sparkContext.clearJobGroup()
               }))
             }
 
@@ -959,10 +891,8 @@ final class FrontierCrawler(
             m = CheckpointStore.Manifest(round, newNextIdx, newWatermark,
               m.errorCount + errCnt, m.redirectCount + redirCnt,
               m.scheduledTotal + batchCnt, m.fetchedTotal + batchCnt,
-              m.visitedRounds :+ round, liveSegs,
-              bloom.isDefined || (bucketMode && bloomRound >= 0), bloomRound,
-              hostStateRound, curSeenKind, curSeenBuckets,
-              m.expiryToken, patternStateRound,
+              m.visitedRounds :+ round, liveSegs, bloomRound,
+              hostStateRound, sizing, patternStateRound,
               if (contentFresh >= 0) m.contentRounds :+ round else m.contentRounds,
               latencyStateRound)
             store.saveManifest(m)
@@ -970,7 +900,6 @@ final class FrontierCrawler(
             f.unpersist()
             round += 1
           }
-          bloomBc.foreach(_.destroy())
       }
     }
     // a build still in flight at loop exit: finish and commit it, so resume
@@ -980,9 +909,8 @@ final class FrontierCrawler(
     // terminating round (empty frontier ⇒ that round writes no manifest):
     // compare persisted vs in-memory pointer, not just the pending future.
     adoptSnapshot(block = true)
-    val hasBloomNow = bloom.isDefined || (bucketMode && bloomRound >= 0)
-    if (m.round >= 0 && (m.bloomRound != bloomRound || m.hasBloom != hasBloomNow)) {
-      m = m.copy(hasBloom = hasBloomNow, bloomRound = bloomRound)
+    if (m.round >= 0 && m.bloomRound != bloomRound) {
+      m = m.copy(bloomRound = bloomRound)
       store.saveManifest(m)
     }
 

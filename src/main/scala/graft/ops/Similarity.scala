@@ -84,11 +84,12 @@ object Similarity {
     * move two orders of magnitude more bytes; the vectors re-attach by id
     * to the deduplicated candidate set only.
     *
-    * Rows whose vector is null, not `dims` wide or of zero norm are
-    * dropped before signing and never pair: every plane dot of such a
-    * vector is null or 0, so each would sign 0 in every band — the band
-    * self-join would be quadratic in them, and a zero-norm pair would
-    * reach the cosine's 0/0. */
+    * Rows whose vector is null, not `dims` wide or of zero or non-finite
+    * norm are dropped before signing and never pair: every plane dot of a
+    * null or zero vector is null or 0, so each would sign 0 in every band —
+    * the band self-join would be quadratic in them, and a zero-norm pair
+    * would reach the cosine's 0/0; a non-finite vector scores NaN against
+    * everything (see `verifiable`). */
   def lshBandedNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int, dims: Int, threshold: Double): DataFrame = {
     val e = verifiable(emb, idCol, vecCol).filter(size(col("e")) === dims)
@@ -113,11 +114,15 @@ object Similarity {
       .select(col("bs.band").as("band"), col("bs.sig").as("sig"), col(idCol))
   }
 
-  /** `(idCol, e)` rows a cosine can score: a null vector has a null and
-    * a zero vector a zero norm, and 0/0 throws under ANSI mode. */
+  /** `(idCol, e)` rows a cosine can score: those whose squared norm is
+    * positive and finite. A null vector has a null and a zero vector a zero
+    * norm, and 0/0 throws under ANSI mode. A NaN or infinite component, or
+    * one whose square overflows, makes the norm NaN or infinite and every
+    * cosine NaN — which Spark orders above every number, so it would pass
+    * `cos >= threshold` and pair with everything. */
   private def verifiable(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol), col(vecCol).cast("array<double>").as("e"))
-      .filter(dot("e", "e") > 0)
+      .filter(dot("e", "e") > 0 && dot("e", "e") < Double.PositiveInfinity)
 
   /** The cosine verifier: pairs carrying both vectors (`e1`, `e2`) scored
     * and kept at `cos >= threshold`, as `(v1, v2, cos)`. */
@@ -128,8 +133,8 @@ object Similarity {
       .select(col("d1").as("v1"), col("d2").as("v2"), col("cos"))
 
   /** Exact cosine near-dup pairs (bounded input — the verification
-    * baseline for [[lshBandedNearDupPairs]]). Null and zero-norm vectors
-    * never pair, as there. */
+    * baseline for [[lshBandedNearDupPairs]]). Null, zero-norm and
+    * non-finite vectors never pair, as there. */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     val e = verifiable(emb, idCol, vecCol)

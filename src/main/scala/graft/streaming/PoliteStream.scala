@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming discovery event: a URL entering the frontier. */
@@ -49,29 +48,4 @@ object PoliteStream {
           out.iterator
       }
   }
-
-  /** Streaming URL-seen dedup (U3/J1 in streaming form): admit each URL the
-    * first time it is discovered; re-discoveries within the watermark
-    * horizon are dropped with bounded keyed state
-    * (`dropDuplicatesWithinWatermark`). The continuous counterpart of the
-    * batch engine's Bloom-prefiltered anti-join — on a real deployment the
-    * horizon is the frontier's re-discovery window and the batch visited
-    * store handles anything older. */
-  def firstSeen(entries: Dataset[StreamEntry],
-      watermarkDelay: String = "10 minutes"): Dataset[StreamEntry] = {
-    import entries.sparkSession.implicits._
-    entries
-      .withWatermark("eventTime", watermarkDelay)
-      .dropDuplicatesWithinWatermark("url")
-      .as[StreamEntry]
-  }
-
-  /** Event-time fetch-rate observability: tumbling-window per-host counts
-    * with a watermark for state cleanup (S6-style metrics, streaming). */
-  def hostRates(entries: Dataset[StreamEntry], windowLen: String,
-      watermarkDelay: String = "10 seconds"): DataFrame =
-    entries.toDF()
-      .withWatermark("eventTime", watermarkDelay)
-      .groupBy(window(col("eventTime"), windowLen), col("host"))
-      .agg(count(lit(1)).as("n_urls"), min("eventTime").as("first_seen"))
 }

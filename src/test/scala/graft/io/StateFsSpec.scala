@@ -71,9 +71,12 @@ class StateFsSpec extends AnyFunSuite {
     val pages = SiteGraph.localPages(p)
     val seeds = (0 until 3).flatMap(h =>
       pages.find(r => r.status == 200 && r.url.startsWith(s"http://site$h.com")).map(_.url))
+    // a design load of 4M URLs derives a 4-bucket seen-filter store
+    val expected = 4L * 1000 * 1000
+    assert(graft.functions.BloomBucketStore.sizing(expected, 0.01).buckets == 4)
     def cfg(dir: Option[String], rounds: Int) = CrawlConfig(fifoParity = false,
-      sameDomainOnly = false, perHostBudget = 3, bloomEnabled = true, bloomBuckets = 4,
-      bloomMinFrontierRows = 0L, bloomExpectedItems = 100000L, bloomUpdateEvery = 1,
+      sameDomainOnly = false, perHostBudget = 3, bloomEnabled = true,
+      bloomMinFrontierRows = 0L, bloomExpectedItems = expected, bloomUpdateEvery = 1,
       maxRounds = rounds, checkpointDir = dir)
     val reference = new FrontierCrawler(spark, pages.toDS(), cfg(None, Int.MaxValue))
       .crawlSeeds(seeds.toDF("url"))
@@ -89,8 +92,11 @@ class StateFsSpec extends AnyFunSuite {
     assert(resumed.stats == reference.stats)
     // state files exist on the backing store under the scheme-routed root
     assert(Files.exists(java.nio.file.Paths.get(local, "state", "manifest")))
-    assert(Files.list(java.nio.file.Paths.get(local, "state", "bloombuckets")).count() > 0,
-      "no bucketed bloom snapshot written through the scheme")
+    val m = new graft.operators.CheckpointStore(spark, dir).latestManifest().get
+    assert(m.bloomRound >= 0 && m.seen.buckets == 4)
+    assert(Files.list(java.nio.file.Paths.get(local, "state", "bloombuckets",
+      s"round=${m.bloomRound}")).count() == 4,
+      "no 4-bucket bloom snapshot written through the scheme")
   }
 
   test("IceLite snapshot table works on graftfs://") {

@@ -8,11 +8,10 @@ import java.nio.file.Files
 
 /** TTL / re-crawl expiry (`CheckpointStore.expireAndRequeue`): retiring
   * visited rounds re-queues their URLs and the resumed crawl re-fetches
-  * EXACTLY those URLs — with the cuckoo seen-filter updated by in-place
-  * key deletion (the capability Bloom lacks; there the snapshot pointer is
-  * dropped and rebuilt instead). The reference has no re-crawl; this is the
-  * operational story a production crawl needs (pages go stale) and the
-  * reason `seenFilterKind = "cuckoo"` exists.
+  * EXACTLY those URLs. A Bloom filter cannot delete, so expiry drops the
+  * seen-filter snapshot pointer and the next round rebuilds it. The
+  * reference has no re-crawl; this is the operational story a production
+  * crawl needs (pages go stale).
   */
 class RecrawlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -26,194 +25,21 @@ class RecrawlSpec extends AnyFunSuite {
     (0 until params.nHosts).flatMap(h =>
       pages.find(r => r.status == 200 && r.url.startsWith(s"http://site$h.com")).map(_.url))
 
-  private def politeCfg(dir: String, kind: String, buckets: Int) =
+  private def politeCfg(dir: String) =
     CrawlConfig(fifoParity = false, sameDomainOnly = false, perHostBudget = 4,
-      saltBuckets = 4, bloomEnabled = true, bloomBuckets = buckets,
-      seenFilterKind = kind, bloomMinFrontierRows = 0L,
+      saltBuckets = 4, bloomEnabled = true, bloomMinFrontierRows = 0L,
       bloomExpectedItems = 100000L, bloomUpdateEvery = 1,
       checkpointDir = Some(dir), maxRounds = 1000)
 
-  private def crawlPolite(dir: String, kind: String, buckets: Int = 8) = {
+  private def crawlPolite(dir: String) = {
     val pages = SiteGraph.localPages(params)
-    new FrontierCrawler(spark, pages.toDS(), politeCfg(dir, kind, buckets))
+    new FrontierCrawler(spark, pages.toDS(), politeCfg(dir))
       .crawlSeeds(seedsOf(pages).toDF("url"))
-  }
-
-  test("cuckoo expiry: in-place key deletion, resume re-fetches exactly the expired URLs") {
-    val dir = Files.createTempDirectory("graft-recrawl-").toString
-    val out1 = crawlPolite(dir, "cuckoo")
-    val store = new CheckpointStore(spark, dir, visitedFromLog = true)
-    val m1 = store.latestManifest().get
-    assert(m1.seenKind == "cuckoo-buckets" && m1.seenBuckets == 8)
-    val expireRounds = m1.visitedRounds.takeRight(2)
-    val expired = store.readVisited(expireRounds).get
-      .select("url", "urlHash").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val kept = store.readVisited(m1.visitedRounds.filterNot(expireRounds.contains)).get
-      .select("urlHash").collect().map(_.getLong(0)).toSet
-    assert(expired.nonEmpty && kept.nonEmpty)
-
-    val m2 = store.expireAndRequeue(expireRounds)
-    // snapshot kept: delete-in-place, no rebuild needed
-    assert(m2.hasBloom && m2.bloomRound == m1.bloomRound)
-    assert(m2.visitedRounds == m1.visitedRounds.filterNot(expireRounds.contains))
-    // fresh probes: every kept key still present (no false negatives, the
-    // invariant the eligibility split depends on); expired keys gone except
-    // residual 16-bit fingerprint collisions with kept keys (false
-    // positives — safe; bound them instead of demanding zero)
-    val h = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-    kept.foreach(k => assert(h.probe(k), s"false negative on kept key $k"))
-    val ghosts = expired.count(e => h.probe(e._2))
-    assert(ghosts <= math.max(1, expired.size / 10),
-      s"$ghosts of ${expired.size} expired keys still probe true")
-
-    val out2 = crawlPolite(dir, "cuckoo")
-    assert(out2.sortedFound == out1.sortedFound) // converges back to the same set
-    val m3 = store.latestManifest().get
-    val newRounds = (m3.visitedRounds.toSet -- m2.visitedRounds.toSet).toSeq
-    assert(newRounds.nonEmpty, "resume visited nothing")
-    val revisited = store.readVisited(newRounds).get
-      .select("url").collect().map(_.getString(0)).toSet
-    assert(revisited == expired.map(_._1), "resume did not re-fetch exactly the expired URLs")
-  }
-
-  test("interrupted expiry rerun restarts from the .pre originals; copies swept on commit") {
-    val dir = Files.createTempDirectory("graft-recrawl-pre-").toString
-    crawlPolite(dir, "cuckoo")
-    val store = new CheckpointStore(spark, dir, visitedFromLog = true)
-    val m1 = store.latestManifest().get
-    val expireRounds = m1.visitedRounds.takeRight(1)
-    val kept = store.readVisited(m1.visitedRounds.filterNot(expireRounds.contains)).get
-      .select("urlHash").collect().map(_.getLong(0)).toSet
-    val expired = store.readVisited(expireRounds).get
-      .select("urlHash").collect().map(_.getLong(0)).toSet
-    // simulate a crashed previous expiry on a bucket holding BOTH kept and
-    // expired keys (so the rerun's delete pass touches it): the .pre copy
-    // holds the ORIGINAL, the live file is wrecked (here: emptied — the
-    // worst possible partial state). A rerun that read the live file would
-    // lose every kept key in this bucket.
-    def bucketOf(k: Long) = java.lang.Math.floorMod(k, 8L).toInt
-    val b = (0 until 8).find(i =>
-      kept.exists(bucketOf(_) == i) && expired.exists(bucketOf(_) == i)).get
-    val bucketKept = kept.filter(bucketOf(_) == b)
-    val pp = graft.functions.CuckooBucketStore.path(dir, m1.bloomRound, b)
-    val sfs = store.sfs
-    sfs.writeAtomic(pp + ".pre") { out =>
-      val in = new java.io.BufferedInputStream(sfs.open(pp))
-      try in.transferTo(out) finally in.close()
-    }
-    sfs.writeAtomic(pp) { out =>
-      val bo = new java.io.BufferedOutputStream(out)
-      new graft.functions.CuckooFilter(2).writeTo(bo); bo.flush()
-    }
-    graft.functions.CuckooBucketStore.invalidate(dir)
-
-    val m2 = store.expireAndRequeue(expireRounds)
-    val h = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-    bucketKept.foreach(k => assert(h.probe(k),
-      s"kept key $k lost — rerun read the wrecked live bucket, not the .pre original"))
-    // commit swept the copies
-    val roundDir = s"$dir/cuckoobuckets/round=${m2.bloomRound}"
-    assert(!sfs.listNames(roundDir).exists(_.endsWith(".pre")),
-      "pre-delete copies not swept after the manifest committed")
-  }
-
-  test("crawl resume after an interrupted expiry rolls the buckets back first") {
-    val dir = Files.createTempDirectory("graft-recrawl-resume-").toString
-    val out1 = crawlPolite(dir, "cuckoo")
-    val store = new CheckpointStore(spark, dir, visitedFromLog = true)
-    val m1 = store.latestManifest().get
-    val kept = store.readVisited(m1.visitedRounds).get
-      .select("urlHash").collect().map(_.getLong(0)).toSet
-    // wreck a populated bucket, leave its .pre original — the state an
-    // expiry crash leaves; the manifest was never updated, so ALL rounds
-    // are still visited and a resume must see every key
-    val b = kept.map(k => java.lang.Math.floorMod(k, 8L).toInt).head
-    val pp = graft.functions.CuckooBucketStore.path(dir, m1.bloomRound, b)
-    val sfs = store.sfs
-    sfs.writeAtomic(pp + ".pre") { out =>
-      val in = new java.io.BufferedInputStream(sfs.open(pp))
-      try in.transferTo(out) finally in.close()
-    }
-    sfs.writeAtomic(pp) { out =>
-      val bo = new java.io.BufferedOutputStream(out)
-      new graft.functions.CuckooFilter(2).writeTo(bo); bo.flush()
-    }
-    graft.functions.CuckooBucketStore.invalidate(dir)
-
-    // plain resume (no expiry): rollback must restore the originals, so
-    // the completed crawl re-fetches NOTHING and the found set is stable
-    val out2 = crawlPolite(dir, "cuckoo")
-    assert(out2.sortedFound == out1.sortedFound)
-    val m2 = store.latestManifest().get
-    val extra = (m2.visitedRounds.toSet -- m1.visitedRounds.toSet).toSeq
-    val refetched = if (extra.isEmpty) 0L
-      else store.readVisited(extra).map(_.count()).getOrElse(0L)
-    assert(refetched == 0L, s"resume re-fetched $refetched visited URLs")
-    val h = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-    kept.foreach(k => assert(h.probe(k), s"kept key $k lost on resume"))
-    assert(!sfs.listNames(s"$dir/cuckoobuckets/round=${m1.bloomRound}")
-      .exists(_.endsWith(".pre")), "rollback left the .pre copy behind")
-  }
-
-  test("committed expiry's copies are swept on resume, never rolled back") {
-    // the crash window AFTER saveManifest(m2) but BEFORE the copy sweep:
-    // the .pre-<token> copies of a COMMITTED expiry survive on disk. A
-    // rollback would resurrect the committed deletes into the seen filter
-    // forever (their visited rounds are gone from the manifest), so restore
-    // must recognize the manifest's committed token and sweep instead.
-    val dir = Files.createTempDirectory("graft-recrawl-committed-").toString
-    crawlPolite(dir, "cuckoo")
-    val store = new CheckpointStore(spark, dir, visitedFromLog = true)
-    val m1 = store.latestManifest().get
-    val expireRounds = m1.visitedRounds.takeRight(1)
-    val expired = store.readVisited(expireRounds).get
-      .select("urlHash").collect().map(_.getLong(0)).toSet
-    // keep the pre-delete originals of every touched bucket
-    def bucketOf(k: Long) = java.lang.Math.floorMod(k, 8L).toInt
-    val sfs = store.sfs
-    val originals = expired.map(bucketOf).map { b =>
-      val pp = graft.functions.CuckooBucketStore.path(dir, m1.bloomRound, b)
-      val in = new java.io.BufferedInputStream(sfs.open(pp))
-      val bytes = try in.readAllBytes() finally in.close()
-      (b, bytes)
-    }
-
-    val m2 = store.expireAndRequeue(expireRounds)
-    assert(m2.expiryToken.nonEmpty, "committed expiry must record its run token")
-    // re-create the crash window: put the committed run's .pre copies back
-    originals.foreach { case (b, bytes) =>
-      val pp = graft.functions.CuckooBucketStore.path(dir, m2.bloomRound, b)
-      sfs.writeAtomic(pp + s".pre-${m2.expiryToken}")(_.write(bytes))
-    }
-    val ghostsBefore = {
-      graft.functions.CuckooBucketStore.invalidate(dir)
-      val h = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-      expired.count(h.probe)
-    }
-    store.restoreCuckooPreCopies(m2.bloomRound, m2.expiryToken)
-    graft.functions.CuckooBucketStore.invalidate(dir)
-    val h = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-    val ghostsAfter = expired.count(h.probe)
-    assert(ghostsAfter == ghostsBefore,
-      s"committed deletes rolled back: $ghostsBefore ghosts -> $ghostsAfter")
-    val roundDir = s"$dir/cuckoobuckets/round=${m2.bloomRound}"
-    assert(!sfs.listNames(roundDir).exists(_.contains(".bin.pre")),
-      "committed-run copies not swept")
-    // an UNCOMMITTED token still rolls back (the normal crash path)
-    originals.headOption.foreach { case (b, bytes) =>
-      val pp = graft.functions.CuckooBucketStore.path(dir, m2.bloomRound, b)
-      sfs.writeAtomic(pp + ".pre-deadbeef00000000")(_.write(bytes))
-      store.restoreCuckooPreCopies(m2.bloomRound, m2.expiryToken)
-      graft.functions.CuckooBucketStore.invalidate(dir)
-      val h2 = new graft.functions.CuckooBucketHandle(dir, m2.bloomRound, 8)
-      val restored = expired.filter(k => bucketOf(k) == b).count(h2.probe)
-      assert(restored > 0, "uncommitted copy was not restored")
-    }
   }
 
   test("authority requeue: requeued rows take host rank priority, not depth") {
     val dir = Files.createTempDirectory("graft-recrawl-auth-").toString
-    crawlPolite(dir, "cuckoo")
+    crawlPolite(dir)
     val store = new CheckpointStore(spark, dir, visitedFromLog = true)
     val m1 = store.latestManifest().get
     val hp = Seq(("site0.com", 5), ("site1.com", 7)).toDF("host", "priority")
@@ -235,7 +61,7 @@ class RecrawlSpec extends AnyFunSuite {
 
   test("recency requeue: fresher lastmod is re-fetched first within the same priority class") {
     val dir = Files.createTempDirectory("graft-recrawl-rec-").toString
-    crawlPolite(dir, "cuckoo")
+    crawlPolite(dir)
     val store = new CheckpointStore(spark, dir, visitedFromLog = true)
     val m1 = store.latestManifest().get
     val expireRounds = m1.visitedRounds.takeRight(2)
@@ -285,7 +111,7 @@ class RecrawlSpec extends AnyFunSuite {
     // back before every staler one
     val pages = SiteGraph.localPages(params)
     new FrontierCrawler(spark, pages.toDS(),
-      politeCfg(dir, "cuckoo", 8).copy(perHostBudget = 1),
+      politeCfg(dir).copy(perHostBudget = 1),
       hostPriority = Some(hp)).crawlSeeds(seedsOf(pages).toDF("url"))
     val m3 = store.latestManifest().get
     val newRounds = (m3.visitedRounds.toSet -- m2.visitedRounds.toSet).toSeq.sorted
@@ -301,18 +127,19 @@ class RecrawlSpec extends AnyFunSuite {
 
   test("bloom expiry: pointer dropped (no delete), resume rebuilds and re-fetches exactly") {
     val dir = Files.createTempDirectory("graft-recrawl-bloom-").toString
-    val out1 = crawlPolite(dir, "bloom")
+    val out1 = crawlPolite(dir)
     val store = new CheckpointStore(spark, dir, visitedFromLog = true)
     val m1 = store.latestManifest().get
-    assert(m1.seenKind == "bloom-buckets" && m1.bloomRound >= 0)
+    assert(m1.bloomRound >= 0 &&
+      m1.seen == graft.functions.BloomBucketStore.sizing(100000L, 0.01))
     val expireRounds = Seq(m1.visitedRounds.last)
     val expired = store.readVisited(expireRounds).get
       .select("url").collect().map(_.getString(0)).toSet
 
     val m2 = store.expireAndRequeue(expireRounds)
-    assert(!m2.hasBloom && m2.bloomRound == -1, "a Bloom snapshot cannot delete — pointer must drop")
+    assert(m2.bloomRound == -1, "a Bloom snapshot cannot delete — pointer must drop")
 
-    val out2 = crawlPolite(dir, "bloom")
+    val out2 = crawlPolite(dir)
     assert(out2.sortedFound == out1.sortedFound)
     val m3 = store.latestManifest().get
     assert(m3.bloomRound >= 0, "resume did not rebuild the filter snapshot")
@@ -325,7 +152,7 @@ class RecrawlSpec extends AnyFunSuite {
   test("ExpireCli: flag parsing and end-to-end expiry") {
     import graft.ExpireCli
     val dir = Files.createTempDirectory("graft-recrawl-cli-").toString
-    val out1 = crawlPolite(dir, "cuckoo")
+    val out1 = crawlPolite(dir)
     intercept[ExpireCli.CliUsageError](ExpireCli.run(spark, Array.empty))
     intercept[ExpireCli.CliUsageError](ExpireCli.run(spark, Array(dir)))
     intercept[ExpireCli.CliUsageError](
@@ -356,11 +183,11 @@ class RecrawlSpec extends AnyFunSuite {
       segIdx(u) >= segBase && segIdx(u) < segBase + CheckpointStore.RecencyBand,
       s"$u idx ${segIdx(u)} outside the recency band"))
     // and the re-crawl still re-fetches exactly (found set invariant below)
-    val out1b = crawlPolite(dir, "cuckoo")
+    val out1b = crawlPolite(dir)
     assert(out1b.sortedFound == out1.sortedFound)
     val expected2 = Seq(store.latestManifest().get.visitedRounds.last)
     assert(ExpireCli.run(spark, Array(dir, "--last", "1")) == expected2)
-    val out2 = crawlPolite(dir, "cuckoo")
+    val out2 = crawlPolite(dir)
     assert(out2.sortedFound == out1.sortedFound)
   }
 

@@ -152,4 +152,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(Similarity.nearDupPairs(e, "vec_id", "embedding", threshold = 0.5)
       .collect().isEmpty)
   }
+
+  test("NaN and infinite vectors never pair: a NaN cosine must not pass the threshold") {
+    // a NaN component makes every plane dot NaN (each band signs all-ones)
+    // and every cosine NaN, which Spark orders above 0.95
+    def pairs(rows: Seq[(Long, Seq[Double])]) = {
+      val e = rows.toDF("vec_id", "embedding")
+      (Similarity.lshBandedNearDupPairs(e, "vec_id", "embedding",
+        planes = 4, bands = 2, dims = 4, threshold = 0.95).collect().toSeq,
+        Similarity.nearDupPairs(e, "vec_id", "embedding", threshold = 0.95)
+          .collect().toSeq)
+    }
+    val unit = (3L, Seq(1.0, 0.0, 0.0, 0.0))
+    assert(pairs(Seq((1L, Seq(Double.NaN, 1.0, 0.0, 0.0)),
+      (2L, Seq(Double.NaN, 0.0, 1.0, 0.0)), unit)) == ((Nil, Nil)))
+    // ±Inf components, and a finite one whose square overflows to +Inf
+    assert(pairs(Seq((1L, Seq(Double.PositiveInfinity, 0.0, 0.0, 0.0)),
+      (2L, Seq(Double.NegativeInfinity, 0.0, 0.0, 0.0)),
+      (4L, Seq(1e200, 0.0, 0.0, 0.0)), unit)) == ((Nil, Nil)))
+  }
 }

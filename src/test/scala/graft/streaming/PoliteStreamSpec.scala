@@ -6,8 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
 /** Streaming politeness: per-host slots stay monotone and delay-spaced
-  * across micro-batches (keyed state survives), windowed host rates
-  * aggregate under a watermark.
+  * across micro-batches (keyed state survives).
   */
 class PoliteStreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -39,42 +38,6 @@ class PoliteStreamSpec extends AnyFunSuite {
       assert(bSlots.map(_.fetchAtMs).toSeq == Seq(0L, 100L))
       // no two fetches of one host share a slot
       assert(rows.groupBy(r => (r.host, r.slot)).forall(_._2.length == 1))
-    } finally q.stop()
-  }
-
-  test("firstSeen: streaming URL-seen dedup across micro-batches, bounded state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamEntry]
-    val out = PoliteStream.firstSeen(in.toDS(), watermarkDelay = "1 hour")
-    val q = out.writeStream.format("memory").queryName("seen")
-      .outputMode("append").start()
-    try {
-      in.addData(entry("u1", "a.com", 1), entry("u1", "a.com", 2), entry("u2", "a.com", 3))
-      q.processAllAvailable()
-      // a later micro-batch re-discovering u1/u2 inside the horizon is dropped
-      in.addData(entry("u1", "a.com", 10), entry("u2", "b.com", 11), entry("u3", "b.com", 12))
-      q.processAllAvailable()
-      val urls = spark.table("seen").as[StreamEntry].collect().map(_.url).sorted.toSeq
-      assert(urls == Seq("u1", "u2", "u3"))
-    } finally q.stop()
-  }
-
-  test("windowed host rates with watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamEntry]
-    val agg = PoliteStream.hostRates(in.toDS(), windowLen = "10 seconds")
-    val q = agg.writeStream.format("memory").queryName("rates")
-      .outputMode("complete").start()
-    try {
-      in.addData(entry("u1", "a.com", 1), entry("u2", "a.com", 2),
-        entry("u3", "a.com", 11), entry("u4", "b.com", 3))
-      q.processAllAvailable()
-      val rows = spark.table("rates")
-        .selectExpr("host", "window.start", "n_urls").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime / 1000, r.getLong(2))).toSet
-      assert(rows == Set(("a.com", 0L, 2L), ("a.com", 10L, 1L), ("b.com", 0L, 1L)))
     } finally q.stop()
   }
 }
