@@ -197,15 +197,9 @@ case class ExtractSitemapImages(child: Expression)
     copy(child = newChild)
 }
 
-/** Order-insensitive digest of a page's resolved+normalized link set —
-  * `resolved_link_digest(base, links)` over (string, array<string>). The
-  * mirror-page suppression key as ONE codegen call; see
-  * [[UrlKernels.resolvedLinkDigest]] for the set semantics. */
-case class ResolvedLinkDigest(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "resolved_link_digest"
+/** Analysis-time input check of the per-page link expressions: a STRING
+  * base URL and an ARRAY<STRING> of hrefs. */
+trait BaseAndLinksInputCheck { self: BinaryExpression =>
   override def checkInputDataTypes(): TypeCheckResult = {
     val okBase = left.dataType.isInstanceOf[StringType]
     val okLinks = right.dataType match {
@@ -217,6 +211,17 @@ case class ResolvedLinkDigest(left: Expression, right: Expression)
       s"$prettyName requires (STRING, ARRAY<STRING>) arguments, got " +
         s"${left.dataType.catalogString}, ${right.dataType.catalogString}")
   }
+}
+
+/** Order-insensitive digest of a page's resolved+normalized link set —
+  * `resolved_link_digest(base, links)` over (string, array<string>). The
+  * mirror-page suppression key as ONE codegen call; see
+  * [[UrlKernels.resolvedLinkDigest]] for the set semantics. */
+case class ResolvedLinkDigest(left: Expression, right: Expression)
+    extends BinaryExpression with BaseAndLinksInputCheck {
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "resolved_link_digest"
   override protected def nullSafeEval(base: Any, links: Any): Any =
     UrlKernels.resolvedLinkDigest(base.asInstanceOf[UTF8String],
       links.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
@@ -225,6 +230,29 @@ case class ResolvedLinkDigest(left: Expression, right: Expression)
       (b, l) => s"graft.functions.UrlKernels.resolvedLinkDigest($b, $l)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression)
       : ResolvedLinkDigest = copy(left = l, right = r)
+}
+
+/** A page's links resolved against `base`, normalized and admitted in one
+  * codegen call — `admitted_links(base, links)` over (string,
+  * array<string>), null at each rejected position (see
+  * [[UrlKernels.admittedLinks]]). The crawl explodes it once, so the link
+  * admission filter is a plain `isnotnull` and no URL validator is copied
+  * onto the relations the admitted links are joined against. */
+case class AdmittedLinks(left: Expression, right: Expression, sameHost: Option[String])
+    extends BinaryExpression with BaseAndLinksInputCheck {
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "admitted_links"
+  override protected def nullSafeEval(base: Any, links: Any): Any =
+    UrlKernels.admittedLinks(base.asInstanceOf[UTF8String],
+      links.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], sameHost.orNull)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val host = ctx.addReferenceObj("sameHost", sameHost.orNull, "java.lang.String")
+    defineCodeGen(ctx, ev,
+      (b, l) => s"graft.functions.UrlKernels.admittedLinks($b, $l, $host)")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression)
+      : AdmittedLinks = copy(left = l, right = r)
 }
 
 /** Column-DSL facade + SQL registration for the URL expression family. */
@@ -242,6 +270,8 @@ object UrlFunctions {
   def extract_sitemap_images(c: Column): Column = CB.column(ExtractSitemapImages(CB.expression(c)))
   def resolved_link_digest(base: Column, links: Column): Column =
     CB.column(ResolvedLinkDigest(CB.expression(base), CB.expression(links)))
+  def admitted_links(base: Column, links: Column, sameHost: Option[String]): Column =
+    CB.column(AdmittedLinks(CB.expression(base), CB.expression(links), sameHost))
 
   /** 64-bit canonical URL key: xxhash64 over the normalized URL (C4). */
   def url_seen_key(c: Column): Column =

@@ -176,6 +176,34 @@ object UrlKernels {
     h
   }
 
+  /** A fetched page's admissible links, each canonicalized ONCE: element
+    * `i` is `normalize(urljoin(base, links[i]))` when that URL passes
+    * admission, else null, so positions (the FIFO `(parent, pos)` order)
+    * survive the caller's explode. Admission is the reference's same-domain
+    * filter (`src/web_crawler.py:176-177`) when `sameHost` is non-null,
+    * else the syntactic and security validators. Codegen entry for
+    * [[graft.functions.AdmittedLinks]]. */
+  def admittedLinks(base: UTF8String,
+      links: org.apache.spark.sql.catalyst.util.ArrayData,
+      sameHost: String): org.apache.spark.sql.catalyst.util.ArrayData = {
+    val n = links.numElements()
+    val b = base.toString
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      if (!links.isNullAt(i)) {
+        val abs = PyUrl.urljoin(b, links.getUTF8String(i).toString)
+        val url = if (abs == null) null else UrlNormalizer.normalize(abs)
+        val ok = url != null && (
+          if (sameHost != null) PyUrl.urlparse(url).netloc == sameHost
+          else UrlValidator.syntacticOk(url) && UrlValidator.securityOk(url))
+        if (ok) out(i) = UTF8String.fromString(url)
+      }
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
   private val LocRe = java.util.regex.Pattern.compile(
     "(?is)<loc\\s*>\\s*(?:<!\\[CDATA\\[(.*?)\\]\\]>|(.*?))\\s*</loc\\s*>")
 

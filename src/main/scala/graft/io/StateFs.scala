@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 import java.io.{InputStream, OutputStream}
@@ -17,9 +18,12 @@ import java.io.{InputStream, OutputStream}
   * the snapshot table real on distributed storage (SCALE.md §2.1).
   *
   * Serializable: task closures (per-bucket Bloom builds/probes) capture one
-  * StateFs and lazily resolve the executor-local FileSystem from the shipped
-  * Hadoop configuration — the driver's `fs.*` settings (credentials,
-  * custom schemes) travel with it.
+  * StateFs and lazily resolve the executor-local FileSystem from the
+  * driver's Hadoop configuration — its `fs.*` settings (credentials, custom
+  * schemes) travel with it. The configuration ships as one broadcast per
+  * StateFs, so a task carries a broadcast handle, not a serialized
+  * configuration to deserialize. On the driver the handle reads the live
+  * configuration; tasks read it as of the handle's construction.
   *
   * Commit protocol: write an attempt-unique `.name.<token>.tmp` sibling, then
   * rename over the target (delete-first — HDFS `rename` does not replace).
@@ -29,9 +33,14 @@ import java.io.{InputStream, OutputStream}
   * with a last-written manifest/marker, so a torn rename leaves the previous
   * state visible, never a mix.
   */
-final class StateFs(confSer: SerializableConfiguration) extends Serializable {
+final class StateFs private (@transient private val driverConf: Configuration,
+    shipped: Option[Broadcast[SerializableConfiguration]]) extends Serializable {
 
-  def conf: Configuration = confSer.value
+  // in a task: the broadcast copy, or (without a session) a default one
+  @transient private lazy val taskConf =
+    shipped.fold(new Configuration())(_.value.value)
+
+  def conf: Configuration = if (driverConf != null) driverConf else taskConf
 
   /** FileSystem owning `p` (Hadoop caches instances per scheme+authority).
     * The local scheme resolves to the raw (non-checksummed) FS: state files
@@ -105,12 +114,16 @@ object StateFs {
   private val seq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** StateFs carrying the session's Hadoop configuration (credentials,
-    * `fs.<scheme>.impl` registrations, defaultFS). */
-  def apply(spark: SparkSession): StateFs =
-    new StateFs(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    * `fs.<scheme>.impl` registrations, defaultFS), broadcast once for this
+    * handle. */
+  def apply(spark: SparkSession): StateFs = {
+    val sc = spark.sparkContext
+    val conf = sc.hadoopConfiguration
+    new StateFs(conf, Some(sc.broadcast(new SerializableConfiguration(conf))))
+  }
 
   /** StateFs over a default Hadoop configuration — resolves `file:` and any
     * classpath-registered scheme. Use the session-carrying `apply` whenever
     * custom `fs.*` settings (credentials, test schemes) must travel. */
-  lazy val local: StateFs = new StateFs(new SerializableConfiguration(new Configuration()))
+  lazy val local: StateFs = new StateFs(new Configuration(), None)
 }

@@ -93,7 +93,7 @@ object Hop {
   *           →(FIFO top-K | per-host polite top-k over (priority,
   *             nextFetchTime) with salted skew-safe windows)→ batch
   *           →(iterated equi-join against pages = redirect-following fetch)→
-  *           →(explode links → resolve → normalize → domain filter →
+  *           →(one resolve+normalize+admit kernel per page → explode →
   *             anti-join)→ new frontier segment; state deltas checkpointed.
   *
   * Two scheduler modes:
@@ -503,11 +503,16 @@ final class FrontierCrawler(
           else {
             val maxBatchIdx = if (cfg.fifoParity) maxIdxAny.asInstanceOf[Long] else -1L
 
-            // J2 + J5: fetch = one equi-join against the precomputed
-            // redirect-resolved pages relation; a miss is a network error
-            // (`response_data is None`, `src/web_crawler.py:126-130`).
-            val fetched = batch.select($"url", $"batchIdx", $"depth")
-              .join(fetchResolved, Seq("url"), "left_outer")
+            // J2 + J5: fetch = one streamed pass over the precomputed
+            // redirect-resolved pages relation. The closure is semi-joined
+            // to the batch keys — the batch is the build side, so the
+            // closure is never collected or broadcast, and a bucketed
+            // closure never shuffles — then the batch is outer-joined to
+            // those hits. A miss is a network error (`response_data is
+            // None`, `src/web_crawler.py:126-130`).
+            val batchRows = batch.select($"url", $"batchIdx", $"depth")
+            val hits = fetchResolved.join(batchRows.select("url"), Seq("url"), "left_semi")
+            val fetched = batchRows.join(hits, Seq("url"), "left_outer")
               .select(
                 $"url".as("origUrl"), $"batchIdx", $"depth",
                 coalesce($"currentUrl", $"url").as("currentUrl"),
@@ -529,14 +534,11 @@ final class FrontierCrawler(
             val flagged = visitedOpt match {
               case Some(v) => // F5: redirect landing already visited (`:117-119`)
                 // only moved, non-external rows (≈ redirectFrac of the batch)
-                // can trip F5 — join that slice, pass the rest through
-                val movedRows = withFlags.filter($"moved" && !$"external")
-                val rest = withFlags.filter(!($"moved" && !$"external"))
-                  .withColumn("finalVisited", lit(false))
-                movedRows.join(v.select($"url".as("__vu")),
-                    $"currentUrl" === $"__vu", "left_outer")
+                // can trip F5; the match condition says so, and every other
+                // row passes through the same join unmatched
+                withFlags.join(v.select($"url".as("__vu")),
+                    $"currentUrl" === $"__vu" && $"moved" && !$"external", "left_outer")
                   .withColumn("finalVisited", $"__vu".isNotNull).drop("__vu")
-                  .unionByName(rest)
               case None => withFlags.withColumn("finalVisited", lit(false))
             }
             val f = flagged
@@ -616,26 +618,26 @@ final class FrontierCrawler(
                 contentFresh = cObs.get("n").asInstanceOf[Long]
                 fresh.drop("__chash")
               }
-            val exploded = okRows
-              .select($"batchIdx".as("parentIdx"), $"depth", $"urlPrime".as("base"),
-                posexplode($"links").as(Seq("pos", "href")))
-              .withColumn("absUrl", url_resolve($"base", $"href"))   // `:170`
-              .withColumn("url", normalize_url($"absUrl"))           // `:173`
-            val domained = baseDomain match {
-              case Some(bd) => exploded.filter(url_host($"url") === lit(bd)) // `:176-177`
-              case None => // multi-host mode: F8+F15 column predicates instead
-                exploded.filter(url_syntactic_valid($"url") && url_security_valid($"url"))
-            }
+            // resolve (`:170`), normalize (`:173`) and the same-domain filter
+            // (`:176-177`; multi-host mode: the F8+F15 validators instead)
+            // run once per link inside one kernel per page; a rejected
+            // link is null at its position, so one explode keeps FIFO's
+            // (parent, pos) order and admission filters on `isnotnull` only
+            val domained = okRows
+              .select($"batchIdx".as("parentIdx"), $"depth",
+                posexplode(admitted_links($"urlPrime", $"links", baseDomain))
+                  .as(Seq("pos", "url")))
+              .filter($"url".isNotNull)
             val batchKeys = batch.select($"url".as("bUrl"), $"batchIdx".as("bIdx"))
             val newEntries = (if (cfg.fifoParity) {
               // reference merge-loop semantics (`:275-291`): duplicates kept,
               // link of batch row i checked against batch rows 0..i, FIFO
               // idx assigned in (parent, position) order
-              val unseen = visitedOpt
+              val fresh = visitedOpt
                 .fold(domained)(v => domained.join(v.select("url"), Seq("url"), "left_anti"))
                 .join(broadcast(batchKeys),
                   $"url" === $"bUrl" && $"bIdx" <= $"parentIdx", "left_anti")
-              unseen.withColumn("discoveryIdx",
+              fresh.withColumn("discoveryIdx",
                   lit(m.nextIdx) + row_number().over(Window.orderBy($"parentIdx", $"pos")).cast("long") - 1)
                 .select($"url", xxhash64($"url").as("urlHash"), url_host($"url").as("host"),
                   ($"depth" + 1).as("depth"), ($"depth" + 1).as("priority"),
@@ -643,22 +645,19 @@ final class FrontierCrawler(
             } else {
               // polite admission is set-semantics: dedup FIRST so every
               // downstream join moves one row per URL, not one per link
-              // occurrence (~6× fewer rows); then drop links to this round's
-              // batch; then the same Bloom-split anti-join as eligibility —
-              // definitely-new links (the common case on a growing crawl)
-              // skip the visited join entirely
-              val dedup = domained.dropDuplicates("url")
+              // occurrence (~6× fewer rows), keeping the least depth of its
+              // discovering parents (the BFS depth, whatever the plan's row
+              // order); then drop links to this round's batch; then the
+              // plain visited anti-join. No Bloom split here: its two
+              // branches would each recompute the admission subtree
+              val dedup = domained.groupBy("url").agg(min($"depth").as("depth"))
                 .withColumn("urlHash", xxhash64($"url"))
               val notBatch = dedup.join(batchKeys, $"url" === $"bUrl", "left_anti")
-              val unseen = (visitedOpt, probe) match {
-                case (None, _) => notBatch
-                case (Some(v), None) => notBatch.join(v.select("url"), Seq("url"), "left_anti")
-                case (Some(v), Some(mc)) =>
-                  bloomSplitAntiJoin(notBatch, v, mc, m.visitedRounds.filter(_ > bloomRound))
-              }
+              val fresh = visitedOpt
+                .fold(notBatch)(v => notBatch.join(v.select("url"), Seq("url"), "left_anti"))
               // deterministic window-free idx: post-dedup there is one row
               // per URL, so hash(url) alone is stable across reruns
-              val hosted = unseen.withColumn("host", url_host($"url"))
+              val hosted = fresh.withColumn("host", url_host($"url"))
               val prioed = hostPriorityRel match {
                 case None => hosted.withColumn("__prio", ($"depth" + 1).cast("int"))
                 case Some(hp) =>
@@ -1029,7 +1028,10 @@ final class FrontierCrawler(
     rationed.withColumn("__budget", budget1)
       .withColumn("rn1", row_number().over(w1)).filter($"rn1" <= $"__budget")
       .withColumn("rn2", row_number().over(w2)).filter($"rn2" <= $"__budget")
-      .dropDuplicates("url")
+      // a URL queued in two frontier segments ranks twice; keep its
+      // best-ranked row. Keyed on (host, url), the w2 host partitioning
+      // already satisfies the dedup, so it adds no shuffle
+      .dropDuplicates("host", "url")
       .withColumn("batchIdx", $"rn2".cast("long") - 1)
       .withColumn("nextFetchTime",
         lit(round.toLong * math.max(cfg.perHostBudget, 1) * delayMs) + ($"rn2" - 1) * delayMs)

@@ -481,16 +481,6 @@ object Dedup {
       .select(col(idCol), col("__w.pos").as("pos"), col("__w.win").as("win"))
   }
 
-  /** Audit side of [[dropDuplicateSpans]]: the duplicated window strings and
-    * their corpus-wide occurrence counts (`(win, n_occurrences)`), descending
-    * by count — what the boilerplate actually is, for eyeballing before a
-    * destructive span-removal run. */
-  def duplicateSpanWindows(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minOccurrences: Long = 2L): DataFrame =
-    spanWindows(df, idCol, textCol, n)
-      .groupBy("win").agg(count(lit(1)).as("n_occurrences"))
-      .filter(col("n_occurrences") >= minOccurrences)
-
   /** Span-level exact-substring dedup (Lee et al. 2022, "Deduplicating
     * Training Data Makes Language Models Better") — the span complement of
     * the document-level operators above: a doc that shares boilerplate with

@@ -54,8 +54,7 @@ final case class ImageQuality(
   * clearly-marked deterministic STUB (seeded from the bytes) — the
   * Spark-side plumbing (schema, partitioning, batch shape, feature
   * dimensionality) is real and tested, and a codec-backed decoder can be
-  * dropped into [[stubProbe]] / [[stubFrames]] without touching the
-  * dataflow.
+  * dropped into [[stubProbe]] without touching the dataflow.
   */
 object Multimodal {
 
@@ -72,15 +71,6 @@ object Multimodal {
       case _ => (-1, -1, -1L)
     }
   }
-
-  /** STUB: deterministic fake frame sampler for video — emits real (tiny)
-    * PNG frames seeded from the payload so downstream image stages can
-    * decode them. Replace with a real frame decoder in production. */
-  private def stubFrames(bytes: Array[Byte], n: Int): Seq[Array[Byte]] =
-    (0 until n).map { i =>
-      val h = SiteGraph.mix(0xf4a3eL, bytes.length.toLong, i.toLong)
-      ImageKernels.encode(graft.sources.ImageGen.render(h, 0xf4a3eL, 32, 24), "png")
-    }
 
   /** Decode / probe metadata per row — images decoded for real. */
   def decodeMeta(media: Dataset[MediaRow]): Dataset[MediaMeta] = {
@@ -789,18 +779,5 @@ object Multimodal {
       .select(col(idCol), col("band"), col("shard"), col("batch_ix"), col("slot"),
         col("width"), col("height"),
         image_resample(col(bytesCol), col("width"), col("height"), lit(resampleMode)).as("bytes"))
-  }
-
-  /** Sample `n` frames per video row (1→N expansion); stub decode. */
-  def sampleFrames(media: Dataset[MediaRow], n: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "video").mapPartitions { it =>
-      it.flatMap { m =>
-        stubFrames(m.bytes, n).zipWithIndex.map { case (frame, i) =>
-          MediaRow(s"${m.media_id}#f$i", "image", frame,
-            m.meta ++ Map("frame" -> i.toString, "source" -> m.media_id))
-        }
-      }
-    }
   }
 }

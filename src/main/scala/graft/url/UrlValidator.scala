@@ -136,19 +136,21 @@ object UrlValidator {
     } else false
   }
 
+  private val DangerousSchemes =
+    Array("javascript:", "data:", "file:", "ftp:", "mailto:", "tel:")
+  private val LocalhostPatterns = Array("localhost", "127.0.0.1", "::1", "0.0.0.0")
+  private val PrivatePrefixes =
+    Array("192.168.", "10.") ++ (16 to 31).map(i => s"172.$i.")
+
   /** security_checks (`url_verifier.py:236-286`) — fully pure. */
   def securityOk(url: String): Boolean = {
     try {
       val lower = url.toLowerCase
-      val dangerousSchemes =
-        Seq("javascript:", "data:", "file:", "ftp:", "mailto:", "tel:")
-      if (dangerousSchemes.exists(lower.startsWith)) return false
+      if (DangerousSchemes.exists(lower.startsWith)) return false
       val p = PyUrl.urlparse(url)
       val domain = p.netloc.split(":", -1)(0).toLowerCase
-      val localhostPatterns = Seq("localhost", "127.0.0.1", "::1", "0.0.0.0")
-      if (localhostPatterns.exists(domain.contains)) return false
-      val privatePrefixes = Seq("192.168.", "10.") ++ (16 to 31).map(i => s"172.$i.")
-      if (privatePrefixes.exists(domain.startsWith)) return false
+      if (LocalhostPatterns.exists(domain.contains)) return false
+      if (PrivatePrefixes.exists(domain.startsWith)) return false
       true
     } catch { case NonFatal(_) => false }
   }

@@ -267,4 +267,34 @@ class PoliteSchedulerSpec extends AnyFunSuite {
     assert(hub.max <= rest.min && hub.max < rest.max,
       s"hub not crawled first under the ration: hub=$hub rest=$rest")
   }
+
+  test("a URL found by parents at two depths in one round is admitted at the least depth") {
+    // per trio, budget 1 a host: round 0 fetches the seeds <p>/s and
+    // <q>/first (depth 0); round 1 fetches <p>/x (depth 1, found in round 0)
+    // next to the lower-ranked seed <q>/late (depth 0). Both link to <t>/t.
+    // Three trios, so the parents meet the dedup in more than one order.
+    def page(url: String, links: String*) =
+      PageRow(url, 200, None, links, None, Some("text/html"), None, None)
+    val trios = Seq(("a", "b", "c"), ("d", "f", "e"), ("g", "0", "h"))
+      .map { case (p, q, t) => (s"http://$p.com", s"http://$q.com", s"http://$t.com/t") }
+    val pages = trios.flatMap { case (p, q, t) =>
+      Seq(page(s"$p/s", "/x"), page(s"$p/x", t), page(s"$q/first"), page(s"$q/late", t), page(t))
+    }
+    val seeds = trios.flatMap { case (p, q, _) =>
+      Seq(s"$p/s" -> 0, s"$q/first" -> 0, s"$q/late" -> 9)
+    }.toDF("url", "priority")
+    val dir = java.nio.file.Files.createTempDirectory("graft-mindepth-").toString
+    val out = new FrontierCrawler(spark, pages.toDS(), CrawlConfig(fifoParity = false,
+      sameDomainOnly = false, perHostBudget = 1, bloomEnabled = false, maxRounds = 2,
+      checkpointDir = Some(dir))).crawlSeeds(seeds)
+    val log = out.visitLog.select("round", "url").as[(Int, String)].collect().toSet
+    assert(log == trios.flatMap { case (p, q, _) =>
+      Seq(0 -> s"$p/s", 0 -> s"$q/first", 1 -> s"$p/x", 1 -> s"$q/late")
+    }.toSet)
+    // round 1 admits into segment 2: every <t>/t at depth 1, priority 1 —
+    // the depth-0 parent's discovery, never the depth-1 parent's
+    val admitted = new CheckpointStore(spark, dir).readSegsRaw(Seq(2))
+      .select("url", "depth", "priority").as[(String, Int, Int)].collect().toSet
+    assert(admitted == trios.map { case (_, _, t) => (t, 1, 1) }.toSet)
+  }
 }

@@ -103,27 +103,6 @@ class DuplicateSpanSpec extends AnyFunSuite {
     assert(got.values.forall(_._2 == 0L))
   }
 
-  test("duplicateSpanWindows audit: window strings + occurrence counts match brute force") {
-    val docs = Seq(
-      1L -> s"$span8 x $span8",
-      2L -> s"y $span8 z")
-    val got = Dedup.duplicateSpanWindows(docs.toDF("doc_id", "text"),
-        "doc_id", "text", n = 8)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // occurrences at (doc,pos) sites: doc1 pos 1 and 10, doc2 pos 2 = 3 for
-    // the span itself; overlapping windows crossing "x" are unique
-    assert(got(span8) == 3L)
-    assert(got.values.forall(_ >= 2L))
-    val wins = for {
-      (_, txt) <- docs
-      toks = txt.split(" ", -1).toSeq
-      i <- 0 to toks.size - 8
-    } yield toks.slice(i, i + 8).mkString(" ")
-    val expect = wins.groupBy(identity).view.mapValues(_.size.toLong)
-      .filter(_._2 >= 2L).toMap
-    assert(got == expect)
-  }
-
   test("hashWindows variant: identical results, window strings never shuffle") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("doc_id") < 200).select("doc_id", "text")

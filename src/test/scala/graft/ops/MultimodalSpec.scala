@@ -59,18 +59,4 @@ class MultimodalSpec extends AnyFunSuite {
     val imgFeat = feats.find(_.media_id.startsWith("img")).get.feature
     assert(imgFeat.exists(_ != 0f)) // real pixel content, not zeros
   }
-
-  test("sampleFrames: 1→N expansion into decodable frames tagged with lineage") {
-    val frames = Multimodal.sampleFrames(mediaFixture.toDS(), 4).collect()
-    assert(frames.length == 2 * 4)
-    frames.foreach { f =>
-      assert(f.kind == "image")
-      val img = ImageKernels.decode(f.bytes)
-      assert(img != null && img.getWidth == 32)
-      assert(f.meta.contains("frame") && f.meta("source").startsWith("vid_"))
-    }
-    // frames feed the image pipeline end-to-end
-    val metas = Multimodal.decodeMeta(frames.toSeq.toDS()).collect()
-    assert(metas.forall(_.decoder == "imageio"))
-  }
 }
